@@ -23,14 +23,30 @@ import org.apache.spark.sql.SparkSession
   *
   * Request-scoped caches are released via `AnalyzeResult.close()` after
   * each response is serialized, so a long-running shell does not
-  * accumulate CacheManager entries (CacheLifecycleSpec pins this). */
+  * accumulate CacheManager entries (CacheLifecycleSpec pins this).
+  *
+  * Every handler runs with the service's session active ([[inSession]]).
+  * The pool's threads have none of their own, and on such a thread
+  * Spark's `SQLConf.get` returns the defaults instead of the session's
+  * conf. That matters most for the compiled-class cache, which Spark sizes
+  * once from `SQLConf.get` on whichever thread compiles first: sized from
+  * the defaults (100 entries) it is smaller than one round of the routes
+  * (about 165 entries), so the LRU evicts every class before the next
+  * request could reuse it and each request recompiled 70-80 classes. */
 object HttpShell {
+
+  /** Run `f` with `spark` as the thread's active session, then clear it:
+    * pool threads are reused, so no session may outlive the request. */
+  private[api] def inSession[T](spark: SparkSession)(f: => T): T = {
+    SparkSession.setActiveSession(spark)
+    try f finally SparkSession.clearActiveSession()
+  }
 
   private def handler(spark: SparkSession)(route: String): HttpHandler =
     new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val (code, body) =
-          try {
+          try inSession(spark) {
             route match {
               case "health" =>
                 if (ex.getRequestMethod == "GET") (200, "null")
@@ -57,8 +73,8 @@ object HttpShell {
             // FastAPI status split: request-shaped failures are
             // pydantic 422s (`app.py:31-67`); anything else is a 500
             case e: Exception =>
-              val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-                .replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", " ")
+              val msg = ResponseAssembly.esc(
+                Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
               val code = e match {
                 case _: IllegalArgumentException => 422 // bad spec/path/grain
                 case _: org.apache.spark.sql.AnalysisException => 422 // unparseable envelope
@@ -121,6 +137,9 @@ object HttpShell {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // one round of the four routes needs about 165 compiled classes;
+      // Spark's default cache of 100 would evict them all every round
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     start(spark, port)

@@ -19,7 +19,7 @@ object ResponseAssembly {
     .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(java.time.ZoneOffset.UTC)
   private def fmtTs(ts: java.sql.Timestamp): String = tsFmt.format(ts.toInstant)
 
-  private def esc(s: String): String =
+  private[api] def esc(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -13,6 +13,10 @@ object SparkTestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the services' compiled-class cache size (HttpShell.main, Bench):
+      // at Spark's default of 100, one /analyze request (about 105
+      // classes) evicts its own classes before the next request
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.sql.warehouse.dir",
               java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()

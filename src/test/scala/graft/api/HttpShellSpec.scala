@@ -1,8 +1,12 @@
 package graft.api
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.SparkTestSession
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** S1/S4 end-to-end over real HTTP: the dev shell serves the
@@ -20,9 +24,9 @@ class HttpShellSpec extends AnyFunSuite {
                   .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
                 HttpResponse.BodyHandlers.ofString())
 
-  private val request = {
+  private def requestOf(month: Int, value: Int => Double): String = {
     val rows = (1 to 20).map(d =>
-      s"""{"date": "2024-03-${f"$d%02d"}T00:00:00Z", "v": ${100.0 + 3 * d}}""")
+      s"""{"date": "2024-${f"$month%02d"}-${f"$d%02d"}T00:00:00Z", "v": ${value(d)}}""")
       .mkString("[", ",", "]")
     s"""{"documents": {"m": {"description": null, "data": $rows}},
        |  "analyticsOptions": {"correlations": [{
@@ -30,6 +34,8 @@ class HttpShellSpec extends AnyFunSuite {
        |    "fromData": "m", "fromIndex": "v", "toData": "m", "toIndex": "v",
        |    "dataSetGranularity": "D", "unitsToForecast": 3}]}}""".stripMargin
   }
+
+  private val request = requestOf(3, d => 100.0 + 3 * d)
 
   test("health + analyze + saturating single + 422 on garbage, over HTTP") {
     val server = HttpShell.start(spark, 0) // ephemeral port
@@ -115,6 +121,73 @@ class HttpShellSpec extends AnyFunSuite {
       assert(healthSec < 2.0,
              f"health probe took $healthSec%.1f s — requests look serialized")
       pool.shutdown()
+    } finally HttpShell.stop(server)
+  }
+
+  test("inSession gives a bare thread the session and its conf, then clears it") {
+    // a clone with a runtime conf the shared session does not have, run
+    // on a thread that inherits no thread-locals (like a pool thread)
+    val session = spark.newSession()
+    val key = SQLConf.SHUFFLE_PARTITIONS.key
+    session.conf.set(key, "7")
+    assert(spark.conf.get(key) != "7")
+    // read after join(), which orders these writes before the reads
+    var before, inside, after, afterThrow: Option[SparkSession] = None
+    var conf = ""
+    val t = new Thread(null, () => {
+      before = SparkSession.getActiveSession
+      HttpShell.inSession(session) {
+        inside = SparkSession.getActiveSession
+        conf = SQLConf.get.getConfString(key)
+      }
+      after = SparkSession.getActiveSession
+      try HttpShell.inSession(session)(throw new IllegalStateException("boom"))
+      catch { case _: IllegalStateException => }
+      afterThrow = SparkSession.getActiveSession
+    }, "t", 0, false)
+    t.start()
+    t.join(30000)
+    assert(!t.isAlive)
+    assert(before.isEmpty)
+    assert(inside.exists(_ eq session))
+    assert(conf == "7")
+    assert(after.isEmpty && afterThrow.isEmpty)
+  }
+
+  test("a second request of the same shape compiles no new classes") {
+    // request values and dates must never reach generated code (e.g. as
+    // an inlined literal): then every later request reuses the classes
+    // the first one compiled. Served with AQE off: AQE re-plans stages as
+    // they finish, and about one request in ten, whatever its data,
+    // compiled one stage again, which would make this count flaky
+    val session = spark.newSession()
+    session.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
+    val server = HttpShell.start(session, 0)
+    try {
+      val port = server.getAddress.getPort
+      val warm = post(port, "/analyze", request)
+      assert(warm.statusCode() == 200, warm.body().take(200))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val second = post(port, "/analyze", requestOf(5, d => 40.0 + 7 * d * d))
+      assert(second.statusCode() == 200, second.body().take(200))
+      assert(second.body() != warm.body())
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+             "the second request compiled new classes")
+    } finally HttpShell.stop(server)
+  }
+
+  test("422 bodies are valid JSON for paths with control characters") {
+    val server = HttpShell.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      val mapper = new ObjectMapper()
+      for ((escaped, raw) <- Seq("\\t" -> "\t", "\\r" -> "\r")) {
+        val bad = post(port, "/analyze",
+          request.replace("\"fromIndex\": \"v\"", "\"fromIndex\": \"v" + escaped + "x\""))
+        assert(bad.statusCode() == 422, bad.body().take(200))
+        val detail = mapper.readTree(bad.body()).get("detail").asText
+        assert(detail.contains("v" + raw + "x"), detail)
+      }
     } finally HttpShell.stop(server)
   }
 
