@@ -57,7 +57,6 @@ object Profile {
     val cents = time("centroid collect")(
       e.filter(col("vec_id") < 32).orderBy("vec_id")
         .collect().map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toSeq)).toSeq)
-    graft.plans.GraftFunctions.register(spark)
     val celled = e
       .withColumn("nrm", sqrt(call_function("vec_dot", col("v"), col("v"))))
       .select(col("vec_id"), col("v"), col("nrm"),

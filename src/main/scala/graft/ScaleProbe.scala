@@ -351,7 +351,6 @@ object ScaleProbe {
         .filter(_.nonEmpty)
       val idxP = Similarity.CoarseIndex(groupsP.indices.map(g => synth(kProbe + g)),
                                         groupsP)
-      graft.plans.GraftFunctions.register(spark)
       val nrmC = sqrt(Similarity.dot(col("v"), col("v")))
       println(s"literal-assign rows: ${time(s"literal hier assign (k=$kProbe)")(
         vecs.select(col("vec_id"),

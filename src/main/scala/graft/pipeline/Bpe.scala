@@ -505,7 +505,6 @@ object Bpe {
     * tokenizers. */
   def bpeSegmentBytes(df: DataFrame, idCol: String, textCol: String,
                       rules: Seq[(String, String)]): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
       call_function("bpe_encode_bytes", col(textCol),
         typedLit(rules.map(_._1)), typedLit(rules.map(_._2))).as("syms"))
@@ -533,7 +532,6 @@ object Bpe {
   def tokenizerFertility(df: DataFrame, idCol: String, textCol: String,
                          cpRules: Seq[(String, String)],
                          byteRules: Seq[(String, String)]): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val nWs = size(filter(split(trim(col(textCol)), " "), t => t =!= ""))
     val nBpe = size(call_function("bpe_encode", col(textCol),
       typedLit(cpRules.map(_._1)), typedLit(cpRules.map(_._2))))
@@ -563,7 +561,6 @@ object Bpe {
     * `bpe_encode` projection (zero shuffle, streaming-safe). */
   def bpeSegment(df: DataFrame, idCol: String, textCol: String,
                  rules: Seq[(String, String)]): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
       call_function("bpe_encode", col(textCol),
         typedLit(rules.map(_._1)), typedLit(rules.map(_._2))).as("syms"))

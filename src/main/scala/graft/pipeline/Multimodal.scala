@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.plans.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,7 +30,6 @@ object Multimodal {
   /** Build the canonical media table from any (id, payload) source:
     * (doc_id, media binary, meta struct<mime, n_bytes, n_frames>). */
   def mediaTable(docs: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs.select(
       col(idCol).as("doc_id"),
       encode(col(payloadCol), "UTF-8").as("media"),
@@ -60,7 +58,6 @@ object Multimodal {
   /** Per-frame features via the native byte_sum expression (stays in
     * whole-stage codegen). */
   def frameFeatures(frames: DataFrame): DataFrame = {
-    GraftFunctions.register(frames.sparkSession)
     frames.select(
       col("doc_id"), col("frame_idx"),
       length(col("frame")).cast("long").as("frame_bytes"),
@@ -75,7 +72,6 @@ object Multimodal {
     * per-channel pixel means [[decodeImage]] extracts are predictable
     * arithmetic over (id, x, y). */
   def imageTable(docs: DataFrame, idCol: String, w: Int = 4, h: Int = 4): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val media = call_function("gen_bmp", col(idCol), lit(w), lit(h))
     docs.select(
       col(idCol).as("doc_id"),
@@ -92,7 +88,6 @@ object Multimodal {
     * null stats — skipped, not fabricated. Pure map-side: a native
     * expression inside whole-stage codegen, no UDF, no shuffle. */
   def decodeImage(media: DataFrame): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     media
       .select(col("doc_id"), col("meta.mime").as("mime"),
               call_function("decode_image", col("media")).as("img"))
@@ -121,7 +116,6 @@ object Multimodal {
     * recipe — q128 verifies the chain); the 4×4 synthetic path is the
     * oracle-verified core. */
   def imagePerceptualDedup(media: DataFrame): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     // memoized: the hashed frame feeds two subtrees (cluster groupBy +
     // join back), and without the barrier projection-collapse would
     // re-inline the decode into every reference (cacheOnce contract)
@@ -143,7 +137,6 @@ object Multimodal {
     * expression; undecodable or would-be-upscaled payloads null out
     * and downstream decode stages skip them. */
   def resizeImages(media: DataFrame, w: Int, h: Int): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     val resized = call_function("image_resize", col("media"), lit(w), lit(h))
     media.select(
       col("doc_id"),
@@ -163,7 +156,6 @@ object Multimodal {
     * [[imagePerceptualDedup]]; same q54 plan: native-expression map +
     * one keyed groupBy + a keyed join back. */
   def audioPerceptualDedup(media: DataFrame, frameSamples: Int = 16): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     val hashed = graft.queries.cacheOnce(media
       .select(col("doc_id"),
               call_function("audio_energy_fp", col("media"), lit(frameSamples)).as("fp"))
@@ -183,7 +175,6 @@ object Multimodal {
     * axis (+17f). */
   def videoTable(docs: DataFrame, idCol: String, w: Int = 4, h: Int = 4,
                  nFrames: Int = 4): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val media = call_function("gen_gif", col(idCol), lit(w), lit(h), lit(nFrames))
     docs.select(
       col(idCol).as("doc_id"),
@@ -203,7 +194,6 @@ object Multimodal {
     * 5 exercises the format's 4-byte row padding. */
   def videoTableAvi(docs: DataFrame, idCol: String, w: Int = 5, h: Int = 3,
                     nFrames: Int = 5): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val media = call_function("gen_avi", col(idCol), lit(w), lit(h), lit(nFrames))
     docs.select(
       col(idCol).as("doc_id"),
@@ -222,7 +212,6 @@ object Multimodal {
     * fabricated. Pure map-side: a native expression + explode, zero
     * shuffles at any corpus size. */
   def decodeVideo(media: DataFrame): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     media
       .select(col("doc_id"), col("meta.mime").as("mime"),
               explode(call_function("decode_video", col("media"))).as("fr"))
@@ -246,7 +235,6 @@ object Multimodal {
     * keyed groupBy. */
   def audioActivitySegments(media: DataFrame, frameSamples: Int = 16,
                             threshold: Long = 5600000L): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     val en = media.select(col("doc_id"),
       posexplode(call_function("audio_frame_energy", col("media"), lit(frameSamples)))
         .as(Seq("frame", "e")))
@@ -339,7 +327,6 @@ object Multimodal {
   }
 
   def videoPerceptualDedup(media: DataFrame): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     val hashed = graft.queries.cacheOnce(media
       .select(col("doc_id"), videoContourFpCol(col("media")).as("fp"))
       .filter(col("fp").isNotNull))
@@ -403,7 +390,6 @@ object Multimodal {
     * (4×4 synthetic core; production images go through
     * [[resizeImages]] first, exactly as [[imagePerceptualDedup]]). */
   def imageNearDedup(media: DataFrame, maxHamming: Int = 2): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     perceptualNearDedup(
       media.select(col("doc_id"),
                    call_function("image_ahash", col("media")).as("fp"))
@@ -415,7 +401,6 @@ object Multimodal {
     * fingerprint (nFrames − 1 delta-sign bits). */
   def audioNearDedup(media: DataFrame, frameSamples: Int = 16,
                      widthBits: Int = 15, maxHamming: Int = 2): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     perceptualNearDedup(
       media.select(col("doc_id"),
                    call_function("audio_energy_fp", col("media"),
@@ -430,7 +415,6 @@ object Multimodal {
     * at). */
   def videoNearDedup(media: DataFrame, widthBits: Int,
                      maxHamming: Int = 2): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     perceptualNearDedup(
       media.select(col("doc_id"), videoContourFpCol(col("media")).as("fp"))
         .filter(col("fp").isNotNull),
@@ -455,7 +439,6 @@ object Multimodal {
   def videoWindowFps(media: DataFrame, windowFrames: Int = 33): DataFrame = {
     require(windowFrames >= 3 && windowFrames <= 65,
             s"windowFrames out of range: $windowFrames")
-    GraftFunctions.register(media.sparkSession)
     val lum = transform(call_function("decode_video", col("media")), f =>
       f.getField("mean_r") + f.getField("mean_g") + f.getField("mean_b"))
     val w = org.apache.spark.sql.expressions.Window
@@ -506,7 +489,6 @@ object Multimodal {
                      windowFrames: Int = 33): DataFrame = {
     require(windowFrames >= 3 && windowFrames <= 65,
             s"windowFrames out of range: $windowFrames")
-    GraftFunctions.register(media.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"), col("win_idx")).orderBy(col("fidx"))
     media.select(col("doc_id"),
@@ -590,7 +572,6 @@ object Multimodal {
     * and RMS one IEEE op away). */
   def audioTable(docs: DataFrame, idCol: String,
                  nSamples: Int = 256, sampleRate: Int = 8000): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val media = call_function("gen_wav", col(idCol), lit(nSamples), lit(sampleRate))
     docs.select(
       col(idCol).as("doc_id"),
@@ -607,7 +588,6 @@ object Multimodal {
     * crossings). Undecodable payloads yield null stats — skipped, not
     * fabricated. Pure map-side, inside whole-stage codegen. */
   def decodeAudio(media: DataFrame): DataFrame = {
-    GraftFunctions.register(media.sparkSession)
     media
       .select(col("doc_id"), col("meta.mime").as("mime"),
               call_function("decode_audio", col("media")).as("au"))

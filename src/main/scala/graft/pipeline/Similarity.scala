@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
 object Similarity extends org.apache.spark.internal.Logging {
 
   /** Sequential-fold dot product over array<double> columns (native
-    * expression; callers' entry points register it on the session). */
+    * expression [[graft.plans.VecDot]]). */
   def dot(a: Column, b: Column): Column =
     call_function("vec_dot", a, b)
 
@@ -43,7 +43,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * (vec_id, v: array<double>); queries are `emb` rows matching
     * `queryPred`. */
   def cosineTopK(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val normed = withNorm(emb)
     val q = normed.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -112,7 +111,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * sq8-score within cells — the search-join shape is orthogonal to
     * how vectors are stored. */
   def sq8TopK(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val enc = graft.queries.cacheOnce(
       emb.select(col("vec_id"), call_function("sq8_encode", col("v")).as("q8"))
         .withColumn("nrm", sqrt(call_function("sq8_dot", col("q8"), col("q8")))))
@@ -156,7 +154,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * oracle replays the fixed-codebook form in SQL). */
   def pqTopK(emb: DataFrame, queryPred: Column, k: Int,
              codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val cbLit = typedLit(codebooks)
     val enc = graft.queries.cacheOnce(
       emb.select(col("vec_id"),
@@ -180,7 +177,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfIndexPq(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
                  codebooks: Seq[Seq[Seq[Double]]], nprobe: Int = 1,
                  coarseProbe: Int = 0, topProbe: Int = 0): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     require(centroids.nonEmpty, "ivfIndexPq needs at least one centroid")
     val cbLit = typedLit(codebooks)
     val probeCells = probeCellsFor(centroids, nprobe, coarseProbe, topProbe)
@@ -218,7 +214,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfTopKPq(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
                 codebooks: Seq[Seq[Seq[Double]]], k: Int, nprobe: Int = 1,
                 coarseProbe: Int = 0, topProbe: Int = 0): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     searchTopKPq(ivfIndexPq(emb, centroids, codebooks, nprobe, coarseProbe,
                             topProbe), typedLit(codebooks), k)
   }
@@ -230,7 +225,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * touched after encode. */
   private def sq8RefineTail(emb: DataFrame, short: DataFrame, k: Int,
                             extraCols: Seq[String] = Nil): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val enc = graft.queries.cacheOnce(
       emb.select(col("vec_id"), call_function("sq8_encode", col("v")).as("q8"))
         .withColumn("nrm", sqrt(call_function("sq8_dot", col("q8"), col("q8")))))
@@ -309,7 +303,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * matched-cell semantics. */
   def lshBucketTopK(emb: DataFrame, planes: Seq[Seq[Double]], k: Int,
                     multiProbe: Boolean = false): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     // the bucket assignment is the LSH index — materialize once so the
     // plane projections run one pass, not once per join side
     val bucketed = graft.queries.cacheOnce(
@@ -453,7 +446,6 @@ object Similarity extends org.apache.spark.internal.Logging {
                                   coarseK0: Int = 0, seed: Long = 42L): CoarseIndex = {
     require(centroids.nonEmpty, "buildCoarseIndexDistributed needs centroids")
     val spark = org.apache.spark.sql.SparkSession.active
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     val k = centroids.size
     val coarseK = math.max(1, math.min(
@@ -683,7 +675,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfIndex(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
                nprobe: Int = 1, coarseProbe: Int = 0,
                topProbe: Int = 0): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     require(centroids.nonEmpty, "ivfIndex needs at least one centroid")
     val probeCells = probeCellsFor(centroids, nprobe, coarseProbe, topProbe)
     graft.queries.cacheOnce(withNorm(emb).select(
@@ -706,7 +697,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfIndexSq8(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
                   nprobe: Int = 1, coarseProbe: Int = 0,
                   topProbe: Int = 0): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     require(centroids.nonEmpty, "ivfIndexSq8 needs at least one centroid")
     val probeCells = probeCellsFor(centroids, nprobe, coarseProbe, topProbe)
     val q8 = call_function("sq8_encode", col("v"))
@@ -795,7 +785,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   private def fineFrameOf(spark: org.apache.spark.sql.SparkSession,
                           groups: Seq[Seq[(Int, Seq[Double])]]): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val rows = groups.zipWithIndex.flatMap { case (members, g) =>
       members.map { case (cid, cv) => (cid.toLong, g.toLong, cv) }
     }
@@ -857,7 +846,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * the literal descent's output (parity test-pinned). */
   def ivfCellsJoinFrame(emb: DataFrame, frames: IvfFrames, nprobe: Int,
                         coarseProbe: Int = 1, topProbe: Int = 1): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     require(nprobe >= 1 && coarseProbe >= 1 && topProbe >= 1,
             s"nprobe=$nprobe coarseProbe=$coarseProbe topProbe=$topProbe")
     val routed = withNorm(emb).select(
@@ -919,7 +907,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * path-agnostic. */
   def ivfIndexJoinSq8(emb: DataFrame, frames: IvfFrames, nprobe: Int = 1,
                       coarseProbe: Int = 1, topProbe: Int = 1): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val cells = ivfCellsJoinFrame(emb, frames, nprobe, coarseProbe, topProbe)
     graft.queries.cacheOnce(
       emb.select(col("vec_id"), call_function("sq8_encode", col("v")).as("q8"))
@@ -942,7 +929,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfIndexJoinPq(emb: DataFrame, frames: IvfFrames,
                      codebooks: Seq[Seq[Seq[Double]]], nprobe: Int = 1,
                      coarseProbe: Int = 1, topProbe: Int = 1): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val cbLit = typedLit(codebooks)
     val cells = ivfCellsJoinFrame(emb, frames, nprobe, coarseProbe, topProbe)
     graft.queries.cacheOnce(
@@ -1040,7 +1026,6 @@ object Similarity extends org.apache.spark.internal.Logging {
                                 maxTrainPerGroup: Int = 100000): IvfFrames = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = emb.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     val n = emb.count()
     require(n > 0, "buildIvfFramesDistributed needs a non-empty corpus")
@@ -1103,7 +1088,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * Unordered pairs (a < b), no ranking — feeds a dedup keep/drop
     * decision downstream. */
   def nearDupPairs(emb: DataFrame, planes: Seq[Seq[Double]], minCos: Double): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     // same materialized-index pattern as ivfTopK/lshBucketTopK
     val bucketed = graft.queries.cacheOnce(
       withNorm(emb).select(col("vec_id"), col("v"), col("nrm"),
@@ -1148,7 +1132,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * 1/√outDim factor cancels in cosine, which is the only consumer. */
   def jlProject(emb: DataFrame, inDim: Int, outDim: Int,
                 salt: String = "jl"): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val m = jlMatrix(outDim, inDim, salt)
     emb.withColumn("vp", array(m.map(row => dot(col("v"), typedLit(row))): _*))
   }
@@ -1167,7 +1150,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def jlTopKRefine(emb: DataFrame, queryPred: Column, k: Int, shortlist: Int,
                    inDim: Int, outDim: Int, salt: String = "jl"): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k=$k")
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     // the projected frame is the reduced-dimension INDEX — one pass,
     // shared by both join sides and across calls
     val proj = graft.queries.cacheOnce(
@@ -1235,7 +1217,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def semanticDedup(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
                     tau: Double): DataFrame = {
     require(centroids.nonEmpty, "semanticDedup needs centroids")
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val celled = withNorm(emb)
       .withColumn("cell", ivfCellOf(col("v"), col("nrm"), centroids))
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
@@ -1315,7 +1296,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * keyed window. Nothing corpus-sized moves. */
   def semanticContamination(emb: DataFrame, evalPred: Column,
                             tau: Double): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val normed = withNorm(emb.select(col("vec_id"), col("v")))
     val ev = normed.filter(evalPred)
       .select(col("vec_id").as("eval_id"), col("v").as("ev"), col("nrm").as("en"))
@@ -1360,7 +1340,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * oracle replay, [[trainCentroids]] is the Spark-ML path. */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int): Seq[(Int, Seq[Double])] = {
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0: got $k, $iters")
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col("vec_id"), col("v"))
     var cents: Seq[(Int, Seq[Double])] = e.orderBy(col("vec_id")).limit(k)
       .collect().toSeq.zipWithIndex
@@ -1389,7 +1368,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * the centroid vector + one keyed count. */
   def kmeansAssign(emb: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame = {
     require(cents.nonEmpty, "kmeansAssign needs centroids")
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val spark = emb.sparkSession
     import spark.implicits._
     val cf = broadcast(cents.map { case (cid, cv) => (cid.toLong, cv) }
@@ -1433,7 +1411,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     * .scoreHashedLogisticInline]] contract applied to clustering). */
   def kmeansAssignInline(emb: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame = {
     require(cents.nonEmpty, "kmeansAssignInline needs centroids")
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val byCid = cents.sortBy(_._1)
     val cidArr = typedLit(byCid.map(_._1.toLong))
     val cvArr = typedLit(byCid.map(_._2))
@@ -1496,7 +1473,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def semanticDedupFrames(emb: DataFrame, frames: IvfFrames, tau: Double,
                           nprobe: Int = 1, coarseProbe: Int = 1,
                           topProbe: Int = 1): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val celled = ivfIndexJoin(emb, frames, nprobe, coarseProbe, topProbe)
     val a = celled.select(col("vec_id").as("da"), col("v").as("va"),
                           col("nrm").as("na"), explode(col("cells")).as("pc"))
@@ -1541,7 +1517,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def contrastivePairs(emb: DataFrame, frames: IvfFrames, tau: Double,
                        nprobe: Int = 1, coarseProbe: Int = 1,
                        topProbe: Int = 1): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val celled = ivfIndexJoin(emb, frames, nprobe, coarseProbe, topProbe)
     val a = celled.select(col("vec_id").as("da"), col("v").as("va"),
                           col("nrm").as("na"), explode(col("cells")).as("pc"))
@@ -1631,7 +1606,6 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfCellStats(emb: DataFrame, centroids: Seq[(Int, Seq[Double])]): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val idx = ivfIndex(emb, centroids)
     val cents = broadcast(
       centroids.map { case (cid, cv) => (cid.toLong, cv) }

@@ -307,7 +307,6 @@ object TextAnalysis {
             s"hybridTopK needs query terms and pool >= k >= 1: k=$k pool=$pool")
     val spark = df.sparkSession
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val sparse = bm25TopK(df, idCol, textCol, query, pool)
       .select(col("doc_id"), col("rank").as("bm25_rank"))
     val qv = Similarity.embedDocs(
@@ -1447,7 +1446,6 @@ object TextAnalysis {
     * CJK / combining-mark / astral-plane text (q134 runs the multibyte
     * union). */
   def normalizeDocs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val norm = regexp_replace(trim(call_function("text_nfc", col(textCol))),
                               " +", " ")
     df.select(col(idCol).as("doc_id"),
@@ -1830,7 +1828,6 @@ object TextAnalysis {
   }
 
   def charStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("doc_id"),
               call_function("char_stats", col(textCol)).as("cs"))
       .select(col("doc_id"), col("cs.n_chars").as("n_chars"),

@@ -282,7 +282,6 @@ object TextDedup {
   def withRowMinhashSignature(df: DataFrame, textCol: String, nHashes: Int,
                               exclude: Seq[String] = Nil): DataFrame = {
     require(nHashes >= 1, s"need at least one hash, got $nHashes")
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val sig = call_function("minhash_sig", col(textCol), lit(nHashes),
                             typedLit(exclude))
     val sigCols = Seq.tabulate(nHashes)(i =>
@@ -330,7 +329,6 @@ object TextDedup {
   def cdcChunks(df: DataFrame, idCol: String, textCol: String,
                 window: Int = 16, maskBits: Int = 6, maxLen: Int = 0,
                 passthrough: Seq[String] = Nil): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("doc_id") +: col(textCol).as("__t") +:
               passthrough.map(col) :+
               posexplode(call_function("cdc_chunks", col(textCol),
@@ -705,7 +703,6 @@ object TextDedup {
     * composition paid an interpreted `aggregate` lambda per
     * (token, bit): 16× per token. */
   def withRowSimhash16(df: DataFrame, textCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.withColumn("simhash", call_function("simhash16", col(textCol)))
   }
 
@@ -715,7 +712,6 @@ object TextDedup {
     * extended over md5(token) and md5('1'+token)). Zero-shuffle
     * projection like [[withRowSimhash16]]; LongType output. */
   def withRowSimhash64(df: DataFrame, textCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.withColumn("simhash", call_function("simhash64", col(textCol)))
   }
 
@@ -875,7 +871,6 @@ object TextDedup {
     * [[graft.plans.Simhash128]] for the 10¹⁰-doc band-key arithmetic
     * that motivates the width). Zero-shuffle projection. */
   def withRowSimhash128(df: DataFrame, textCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.withColumn("simhash", call_function("simhash128", col(textCol)))
   }
 
@@ -1418,7 +1413,6 @@ object TextDedup {
     * codegen'd O(n) pass (monotonic deque), streaming-safe. */
   def winnowFingerprints(df: DataFrame, idCol: String, textCol: String,
                          k: Int = 8, w: Int = 16): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("doc_id"),
               explode(call_function("winnow_fps", col(textCol),
                                     lit(k), lit(w))).as("fp"))

@@ -1,8 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 
@@ -170,16 +171,24 @@ object VecDot {
   }
 }
 
-/** Session registration for graft's native SQL functions. Idempotent:
-  * re-registering an already-present function would log a "replaced a
-  * previously registered function" warning per call site. */
+/** graft's native SQL functions: one row of [[fns]] per function,
+  * name -> builder.
+  *
+  * Every session has them from creation. [[GraftExtensions]] is listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * and Spark's `SparkSession` builder applies every provider listed there
+  * to each session it builds; `newSession()` clones share the parent's
+  * extensions. No `--conf spark.sql.extensions` and no per-session set-up
+  * call is needed: call sites name a function with
+  * `call_function("name", ...)` or in SQL. Adding a function means adding
+  * one row to [[fns]]. */
 object GraftFunctions {
   private[plans] def intLit(e: Expression, what: String): Int = {
     require(e.foldable, s"$what must be a literal")
     e.eval() match { case i: Int => i; case l: Long => l.toInt }
   }
 
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[plans] val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "byte_sum" -> (exprs => ByteSum(exprs.head)),
     "rolling_hash" -> (exprs => RollingHash(exprs.head)),
     "text_nfc" -> (exprs => TextNfc(exprs.head)),
@@ -221,126 +230,17 @@ object GraftFunctions {
     "winnow_fps" -> (exprs => WinnowFps.fromArgs(exprs)),
     "char_stats" -> (exprs => CharStats.fromArgs(exprs)),
     "trend_fold" -> (exprs => TrendFold(exprs.head, exprs(1))))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    fns.foreach { case (name, builder) =>
-      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!reg.functionExists(id))
-        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-    if (!spark.experimental.extraOptimizations.contains(FrameLimitRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FrameLimitRule
-  }
 }
 
-/** `SparkSessionExtensions` entry point: makes graft's native functions
-  * available to any session via
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` (the
-  * injection route for cluster deployments, where sessions are built by
-  * the platform rather than application code). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("byte_sum"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[ByteSum].getName, "byte_sum"),
-       (exprs: Seq[Expression]) => ByteSum(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("rolling_hash"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[RollingHash].getName, "rolling_hash"),
-       (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[VecDot].getName, "vec_dot"),
-       (exprs: Seq[Expression]) => VecDot(exprs.head, exprs(1))))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("ivf_assign"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[IvfAssign].getName, "ivf_assign"),
-       (exprs: Seq[Expression]) => IvfAssign.fromArgs(exprs)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("gen_bmp"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[GenBmp].getName, "gen_bmp"),
-       (exprs: Seq[Expression]) => GenBmp(exprs.head,
-         GraftFunctions.intLit(exprs(1), "gen_bmp width"),
-         GraftFunctions.intLit(exprs(2), "gen_bmp height"))))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("decode_image"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[DecodeImage].getName, "decode_image"),
-       (exprs: Seq[Expression]) => DecodeImage(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("gen_wav"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[GenWav].getName, "gen_wav"),
-       (exprs: Seq[Expression]) => GenWav(exprs.head,
-         GraftFunctions.intLit(exprs(1), "gen_wav samples"),
-         GraftFunctions.intLit(exprs(2), "gen_wav rate"))))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("decode_audio"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[DecodeAudio].getName, "decode_audio"),
-       (exprs: Seq[Expression]) => DecodeAudio(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[MinhashSig].getName, "minhash_sig"),
-       (exprs: Seq[Expression]) => MinhashSig.fromArgs(exprs)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("cdc_chunks"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[CdcChunks].getName, "cdc_chunks"),
-       (exprs: Seq[Expression]) => CdcChunks.fromArgs(exprs)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("simhash16"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[Simhash16].getName, "simhash16"),
-       (exprs: Seq[Expression]) => Simhash16(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[Simhash64].getName, "simhash64"),
-       (exprs: Seq[Expression]) => Simhash64(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("simhash128"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[Simhash128].getName, "simhash128"),
-       (exprs: Seq[Expression]) => Simhash128(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("sq8_encode"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[Sq8Encode].getName, "sq8_encode"),
-       (exprs: Seq[Expression]) => Sq8Encode(exprs.head)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("sq8_dot"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[Sq8Dot].getName, "sq8_dot"),
-       (exprs: Seq[Expression]) => Sq8Dot(exprs.head, exprs(1))))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("sq8_dot_asym"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[Sq8DotAsym].getName, "sq8_dot_asym"),
-       (exprs: Seq[Expression]) => Sq8DotAsym(exprs.head, exprs(1))))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("pq_encode"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[PqEncode].getName, "pq_encode"),
-       (exprs: Seq[Expression]) => PqOps.encodeFromArgs(exprs)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("pq_dot"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[PqDot].getName, "pq_dot"),
-       (exprs: Seq[Expression]) => PqOps.dotFromArgs(exprs)))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("pq_dot_asym"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[PqDotAsym].getName, "pq_dot_asym"),
-       (exprs: Seq[Expression]) => PqOps.dotAsymFromArgs(exprs)))
+/** Installs every [[GraftFunctions.fns]] row as a built-in function and
+  * [[FrameLimitRule]] as an optimizer rule (see [[GraftFunctions]] for
+  * how Spark finds this class). */
+class GraftExtensions extends SparkSessionExtensionsProvider {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftFunctions.fns.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
     ext.injectOptimizerRule(_ => FrameLimitRule)
   }
 }

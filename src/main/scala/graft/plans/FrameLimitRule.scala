@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{
   Literal, Sequence}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{FILTER, GENERATE}
 import org.apache.spark.sql.types.LongType
 
 /** Optimizer rule: push a `frame_idx < k` bound INTO the frame-index
@@ -67,18 +68,21 @@ object FrameLimitRule extends Rule[LogicalPlan] {
     else capped
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case f @ Filter(cond, g @ Generate(e: Explode, _, _, _, genOut, _)) =>
-      bound(cond, genOut) match {
-        case Some(k) =>
-          val rewritten = e.transform {
-            case seq @ Sequence(Literal(0L, LongType), stop, None, _)
-                if !alreadyBounded(stop, k) =>
-              seq.copy(stop = cappedStop(stop, k))
-          }.asInstanceOf[Explode]
-          if (rewritten fastEquals e) f
-          else f.copy(child = g.copy(generator = rewritten))
-        case None => f
-      }
-  }
+  /** Every optimizer pass of every session runs this rule, so plans
+    * without both a Filter and a Generate are never walked. */
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformWithPruning(_.containsAllPatterns(FILTER, GENERATE)) {
+      case f @ Filter(cond, g @ Generate(e: Explode, _, _, _, genOut, _)) =>
+        bound(cond, genOut) match {
+          case Some(k) =>
+            val rewritten = e.transform {
+              case seq @ Sequence(Literal(0L, LongType), stop, None, _)
+                  if !alreadyBounded(stop, k) =>
+                seq.copy(stop = cappedStop(stop, k))
+            }.asInstanceOf[Explode]
+            if (rewritten fastEquals e) f
+            else f.copy(child = g.copy(generator = rewritten))
+          case None => f
+        }
+    }
 }

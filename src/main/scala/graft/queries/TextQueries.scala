@@ -843,7 +843,6 @@ object TextQueries {
     * engine; the DuckDB oracle folds ord() code points, identical on
     * this ASCII corpus (char length == octet length for every doc). */
   private def q69(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     def rh(c: org.apache.spark.sql.Column) =
       call_function("rolling_hash", encode(c, "UTF-8"))
     t(s, dir, "documents").select(

@@ -336,7 +336,6 @@ object StreamOps {
                              centroids: Seq[(Int, Seq[Double])], nprobe: Int,
                              coarseProbe: Int = 0): DataFrame = {
     import graft.pipeline.Similarity
-    graft.plans.GraftFunctions.register(stream.sparkSession)
     val nrm = sqrt(Similarity.dot(col("v"), col("v")))
     val cells =
       if (coarseProbe <= 0) Similarity.ivfCellsOf(col("v"), nrm, centroids, nprobe)
@@ -369,7 +368,6 @@ object StreamOps {
                                    frames: graft.pipeline.Similarity.IvfFrames,
                                    coarseProbe: Int, topProbe: Int = 1): DataFrame = {
     import graft.pipeline.Similarity
-    graft.plans.GraftFunctions.register(stream.sparkSession)
     stream
       .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
@@ -408,7 +406,6 @@ object StreamOps {
                                     centroids: Seq[(Int, Seq[Double])],
                                     tau: Double, nprobe: Int = 1): DataFrame = {
     import graft.pipeline.Similarity
-    graft.plans.GraftFunctions.register(stream.sparkSession)
     val nrm = sqrt(Similarity.dot(col("v"), col("v")))
     stream.select(col("vec_id").as("stream_id"), col("v").as("qv"), nrm.as("qn"),
                   explode(Similarity.ivfCellsOf(col("v"), nrm, centroids, nprobe))
@@ -507,7 +504,6 @@ object StreamOps {
                                 centroids: Seq[(Int, Seq[Double])], nprobe: Int,
                                 coarseProbe: Int = 0): DataFrame = {
     import graft.pipeline.Similarity
-    graft.plans.GraftFunctions.register(stream.sparkSession)
     val nrm = sqrt(Similarity.dot(col("v"), col("v")))
     val cells =
       if (coarseProbe <= 0) Similarity.ivfCellsOf(col("v"), nrm, centroids, nprobe)

@@ -41,7 +41,6 @@ object TrendTest {
     * predicate — one extra full fold per key). */
   private def foldOf(daily: DataFrame, keyCol: String, dateCol: String,
                      vCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(daily.sparkSession)
     daily
       .select(col(keyCol).as("k"),
         datediff(col(dateCol), lit("1970-01-01")).as("d"),
@@ -109,7 +108,6 @@ object TrendTest {
   def seasonalMannKendall(daily: DataFrame, keyCol: String,
                           dateCol: String, vCol: String,
                           seasonCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(daily.sparkSession)
     val perSeason = daily
       .select(col(keyCol).as("k"), col(seasonCol).as("g"),
         datediff(col(dateCol), lit("1970-01-01")).as("d"),

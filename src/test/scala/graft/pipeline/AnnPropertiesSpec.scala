@@ -68,7 +68,6 @@ object AnnPropertiesSpec extends Properties("graft.ann") {
   private def runAssign(vs: Seq[Seq[Double]],
                         cells: org.apache.spark.sql.Column): Map[Long, Seq[Long]] = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "v")
       .withColumn("nrm", sqrt(call_function("vec_dot", col("v"), col("v"))))
       .select(col("vec_id"), cells.as("cells"))

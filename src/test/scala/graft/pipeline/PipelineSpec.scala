@@ -1349,7 +1349,6 @@ class SimilaritySpec extends AnyFunSuite {
            "groups must partition the centroids")
     // exhaustive coarse probing must reproduce the flat assignment
     // under ANY valid grouping — the same pin the driver builder has
-    graft.plans.GraftFunctions.register(spark)
     val nrm = sqrt(graft.pipeline.Similarity.dot(col("v"), col("v")))
     def assign(c: org.apache.spark.sql.Column) =
       e.select(col("vec_id"), element_at(c, 1).as("cell")).collect()
@@ -1372,7 +1371,6 @@ class SimilaritySpec extends AnyFunSuite {
     }.toDF("vec_id", "v")
     val cents = Similarity.trainCentroids(data, k = 16)
     val idx = Similarity.buildCoarseIndexDistributed(cents)
-    graft.plans.GraftFunctions.register(spark)
     // same probe budget as the driver-built hier recall test, routed
     // through the distributed index
     val nrm = sqrt(Similarity.dot(col("v"), col("v")))
@@ -1431,7 +1429,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("sq8 quantization: per-element error bounded by scale/2, codes are dim bytes") {
-    graft.plans.GraftFunctions.register(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val rows = e.select(col("v"), call_function("sq8_encode", col("v")).as("q8"))
@@ -1452,7 +1449,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("asymmetric sq8 dot equals the exact dot against the reconstruction") {
-    graft.plans.GraftFunctions.register(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(50)
@@ -1474,7 +1470,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("sq8 index survives a parquet round-trip (nullable struct fields still score)") {
-    graft.plans.GraftFunctions.register(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(20)
@@ -1533,7 +1528,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("pq encode/score: asym is bit-exact vs reconstruction, sym matches its grouping") {
-    graft.plans.GraftFunctions.register(spark)
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .limit(40)
@@ -1584,7 +1578,6 @@ class SimilaritySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.plans.PqOps.Codebooks(Array.fill(2)(Array.fill(300)(Array(0.0))))
     }
-    graft.plans.GraftFunctions.register(spark)
     val cb = Seq(Seq(Seq(1.0, 0.0)), Seq(Seq(0.0, 1.0))) // expects dim 4
     val bad = Seq((0L, Seq(1.0, 0.0))).toDF("vec_id", "v")
     val e = intercept[Exception] {
@@ -1989,7 +1982,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("rolling_hash expression: known Rabin-Karp values, empty = 0") {
-    graft.plans.GraftFunctions.register(spark)
     val got = Seq("hello world", "").toDF("s")
       .select(call_function("rolling_hash", encode(col("s"), "UTF-8")).as("h"))
       .collect().map(_.getLong(0))
@@ -2015,7 +2007,6 @@ class MultimodalSpec extends AnyFunSuite {
     // generator (no state, no time semantics), so the SAME calls must
     // work on a readStream frame in append mode — the streaming posture
     // of the q61/q62 plumbing (ingest-time media feature extraction)
-    graft.plans.GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-media").toString
     docs.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
@@ -2114,7 +2105,6 @@ class MultimodalSpec extends AnyFunSuite {
     // gen_bmp/decode_image and gen_wav/decode_audio are pure per-row
     // native expressions (no state, no shuffle), so ingest-time media
     // decoding is just the same calls on a readStream frame
-    graft.plans.GraftFunctions.register(spark)
     val ids = Seq(3L, 4L, 5L).toDF("doc_id")
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-decode").toString
     ids.write.mode("overwrite").parquet(dir)
@@ -2134,7 +2124,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("FrameLimitRule pushes frame_idx bounds into the sequence generator") {
-    graft.plans.GraftFunctions.register(spark)
     val media = Multimodal.mediaTable(docs, "doc_id", "text") // doc 2 has 4 frames
     val limited = Multimodal.frameSample(media).filter(col("frame_idx") < 2)
     // the optimized plan must bound the sequence itself, not just filter
@@ -2150,7 +2139,6 @@ class MultimodalSpec extends AnyFunSuite {
     // The rule is session-wide, so any user plan exploding a NULLABLE
     // sequence bound must keep its semantics: explode(sequence(0, null))
     // is zero rows, and least() alone would turn null into k-1.
-    graft.plans.GraftFunctions.register(spark)
     val df = Seq((1L, Some(3L)), (2L, None: Option[Long]))
       .toDF("id", "stop")
       .select(col("id"), explode(sequence(lit(0L), col("stop"))).as("out"))
@@ -2195,7 +2183,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("decode_image: exact channel means end-to-end; null for garbage bytes") {
-    graft.plans.GraftFunctions.register(spark)
     val ids = Seq(0L, 1L, 12345L).toDF("doc_id")
     val got = Multimodal.decodeImage(Multimodal.imageTable(ids, "doc_id"))
       .collect().map(r => r.getLong(0) ->
@@ -2218,7 +2205,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("image_ahash: by-hand bit replay; perceptual dedup clusters identical pixels") {
-    graft.plans.GraftFunctions.register(spark)
     // ids i and i+256 render IDENTICAL pixels (id·31 mod 256 wraps), so
     // they must share an ahash and cluster with keeper = the smaller id
     val ids = Seq(1L, 257L, 2L).toDF("doc_id")
@@ -2247,7 +2233,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("image_resize: integer box means, orientation-exact round-trip, upscale nulls") {
-    graft.plans.GraftFunctions.register(spark)
     val ids = Seq(5L, 42L).toDF("doc_id")
     val rs = Multimodal.resizeImages(Multimodal.imageTable(ids, "doc_id"), 2, 2)
     val got = Multimodal.decodeImage(rs)
@@ -2276,7 +2261,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("audio_energy_fp: by-hand delta-sign replay; dedup clusters identical contours") {
-    graft.plans.GraftFunctions.register(spark)
     val ids = Seq(3L, 7L).toDF("doc_id")
     val out = Multimodal.audioPerceptualDedup(Multimodal.audioTable(ids, "doc_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -2314,7 +2298,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("gen_gif/decode_video: lossless frame sequence, exact per-frame means end-to-end") {
-    graft.plans.GraftFunctions.register(spark)
     // the exact-palette indexed write makes GIF LZW lossless: every
     // decoded frame mean must EQUAL the formula prediction (k/16)
     val ids = Seq(0L, 42L).toDF("doc_id")
@@ -2344,7 +2327,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("gen_avi/decode_video: RIFF container round-trip, exact DIB means, MJPEG parity") {
-    graft.plans.GraftFunctions.register(spark)
     // DIB frames are bit-exact: every decoded mean must EQUAL the
     // formula prediction (k/15 — width 5 exercises the 4-byte row pad)
     val ids = Seq(0L, 42L).toDF("doc_id")
@@ -2406,7 +2388,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("video perceptual dedup: luminance-contour bits match a by-hand replay") {
-    graft.plans.GraftFunctions.register(spark)
     val ids = Seq(11L, 12L).toDF("doc_id")
     val out = Multimodal.videoPerceptualDedup(Multimodal.videoTable(ids, "doc_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -2426,7 +2407,6 @@ class MultimodalSpec extends AnyFunSuite {
     // shiftleft wraps shift amounts mod 64 — beyond 64 transitions the
     // contour must return null (the audio contract mirrored), never a
     // silently-aliased value that false-clusters distinct long videos
-    graft.plans.GraftFunctions.register(spark)
     val fpOf = (n: Int) => {
       val ids = Seq(21L).toDF("doc_id")
       Multimodal.videoTable(ids, "doc_id", nFrames = n)
@@ -2438,7 +2418,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("long videos: window fps replay by hand; a planted 80-frame dup pair the single-fp guard misses") {
-    graft.plans.GraftFunctions.register(spark)
     // 80 frames = 79 transitions: the single-fp budget guard nulls the
     // whole video, so the pre-r13 near-dedup is PROVABLY blind here
     val ids = Seq(31L, 32L).toDF("doc_id")
@@ -2483,7 +2462,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("long audio: window fps replay by hand; a planted 128-frame dup pair the single-fp guard misses") {
-    graft.plans.GraftFunctions.register(spark)
     // 2048 samples = 128 energy frames = 127 transitions: the
     // single-fp budget guard nulls the whole clip, so the pre-r14
     // near-dedup is PROVABLY blind here (audio = the third modality
@@ -2548,7 +2526,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("near-dedup at maxHamming = 0 degenerates to the exact perceptual ledger") {
-    graft.plans.GraftFunctions.register(spark)
     val media = Multimodal.imageTable((1L to 40L).toDF("doc_id"), "doc_id")
     val exact = Multimodal.imagePerceptualDedup(media)
       .select(col("doc_id"), col("ahash").as("fp"), col("cluster_id"),
@@ -2578,7 +2555,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("audio VAD: segments match a by-hand gaps-and-islands replay") {
-    graft.plans.GraftFunctions.register(spark)
     val ids = Seq(3L, 8L).toDF("doc_id")
     val out = Multimodal.audioActivitySegments(Multimodal.audioTable(ids, "doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -2621,7 +2597,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("decode_audio: exact clip stats end-to-end; null for garbage bytes") {
-    graft.plans.GraftFunctions.register(spark)
     val ids = Seq(0L, 1L, 12345L).toDF("doc_id")
     val got = Multimodal.decodeAudio(Multimodal.audioTable(ids, "doc_id", nSamples = 64))
       .collect().map(r => r.getLong(0) ->
@@ -2647,7 +2622,6 @@ class MultimodalSpec extends AnyFunSuite {
 object GraftSumCheck {
   def check(spark: org.apache.spark.sql.SparkSession): Unit = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val got = Seq("hello", "", "\u0000\u00ff").toDF("s")
       .select(call_function("byte_sum", encode(col("s"), "UTF-8")).as("bs"))
       .as[Long].collect()

@@ -220,7 +220,6 @@ class StreamOpsSpec extends AnyFunSuite {
 
   test("streaming perceptual gate: dup/new/undecodable verdicts, batch parity") {
     import graft.pipeline.Multimodal
-    graft.plans.GraftFunctions.register(spark)
     // corpus = images 1..3; ledger → (fp, keeper) index
     val corpus = Multimodal.imageTable(Seq(1L, 2L, 3L).toDF("doc_id"), "doc_id")
     val ledger = Multimodal.imagePerceptualDedup(corpus)
