@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every registered query timed at the target
   * scale factor; one JSON line on stdout. Interleaved full-suite
@@ -7,44 +6,9 @@ import org.apache.spark.sql.SparkSession
   * index-build) and contention inflation; a wall-time budget degrades
   * the rep count instead of overrunning the driver's window. */
 object Bench {
-  /** WindowExec logs "No Partition Defined ... single partition" for
-    * EVERY unpartitioned window, including the suite's provably bounded
-    * frames: distinct e6 score levels (pipeline/TextAnalysis.scala
-    * e6-quantized quality scores), distinct length values, decile
-    * buckets (stats/MlEval.scala calibration table), and the
-    * topK-limited BPE vocab (pipeline/Bpe.scala) — each frame is
-    * config- or quantization-bounded, so "all data to a single
-    * partition" is a few hundred rows by construction. The flood (50+
-    * identical WARN lines per run) buries real driver-tail signals, so
-    * bench/verify sessions raise that one logger to ERROR. Real
-    * unbounded global windows would be a plan bug, not a log-level
-    * concern — ExplainAll/ScaleProbe sessions keep the WARN. */
-  private[graft] def silenceBoundedWindowWarn(): Unit =
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every available core (the brief's local[32] posture);
-    // SPARK_GRAFT_CPUS overrides for controlled runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: at 345 registered queries ×
-      // several codegen units each, a 100-entry compiled-class cache
-      // thrashes and every bench pass re-runs janino on ~every stage.
-      // 4000 entries lets passes 2-3 (and a long-lived service
-      // cycling the same query shapes — the production posture) reuse
-      // compiled code; scale-independent (it caches code, never data)
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    silenceBoundedWindowWarn()
+    val spark = GraftSession()
     // warmup: touch every table once (file listing, footer reads)
     Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
       .foreach { t =>

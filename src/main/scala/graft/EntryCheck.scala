@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility mirroring the driver's smoke check: `SparkEntry.entry`
   * on sf0.001 must return rows. Usage: runMain graft.EntryCheck [sfDir] */
 object EntryCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY ROWS: $n")
     require(n > 0, "entry() returned no rows")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print formatted physical plans for the named queries
   * (all when no names given) — the ".explain and iterate" loop of the
   * build brief. Usage: runMain graft.ExplainAll <sfDir> [names...] */
@@ -9,13 +7,7 @@ object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     SparkEntry.all
       .filter(q => names.isEmpty || names(q.name))
       .foreach { q =>

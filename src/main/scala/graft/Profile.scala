@@ -1,7 +1,7 @@
 package graft
 
+import graft.ScaleProbe.time
 import graft.pipeline.TextDedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: stage-by-stage timing of the near-dup pipeline (the
@@ -9,20 +9,7 @@ import org.apache.spark.sql.functions._
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def time[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$label%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+    val spark = GraftSession()
 
     // toRdd.count materializes every column of the plan as-is —
     // a plain count() lets the optimizer prune the very expressions

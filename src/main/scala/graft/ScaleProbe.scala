@@ -1,7 +1,7 @@
 package graft
 
+import graft.ScaleProbe.time
 import graft.pipeline.{Similarity, TextDedup}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: empirical scale-up probe for the training-data
@@ -19,26 +19,22 @@ import org.apache.spark.sql.functions._
   * algorithm. Pass an explicit value to reproduce fixed-vocab runs.
   */
 object ScaleProbe {
+  /** Runs `body` and prints its wall time after `label`; the stage
+    * timer of every probe main and of [[Profile]]. */
+  def time[T](label: String)(body: => T): T = {
+    val t0 = System.nanoTime()
+    val r = body
+    println(f"$label%-52s ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    r
+  }
+
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(50000)
     val nVecs = args.drop(1).headOption.map(_.toInt).getOrElse(20000)
     val vocab = args.drop(2).headOption.map(_.toInt).filter(_ > 0)
       .getOrElse(math.max(2000, nDocs / 25))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     import spark.implicits._
-
-    def time[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$label%-32s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
     // deterministic synthetic docs: 40-word texts from the vocabulary,
     // 5% exact duplicates — generated distributively from spark.range
@@ -360,7 +356,7 @@ object ScaleProbe {
       framesP.fine.count() // index build, outside the serving timer
       println(s"frame-assign rows: ${time(s"frame-join assign (k=$kProbe)")(
         Similarity.ivfCellsJoinFrame(vecs, framesP, 1, 2).count())}")
-      // What local[32] CANNOT show: the literal quantizer is a
+      // What a local session CANNOT show: the literal quantizer is a
       // reference-passed object in one JVM here, but on a cluster it is
       // the task binary — java-serialized and shipped to EVERY executor
       // (and resident per JVM). Measure that payload directly; the
@@ -505,13 +501,7 @@ object ScaleProbeAuto {
   def main(args: Array[String]): Unit = {
     val nVecs = args.headOption.map(_.toInt).getOrElse(2500000)
     val k0 = args.drop(1).headOption.map(_.toInt).getOrElse(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val dim = 16
     val vecs = spark.range(nVecs.toLong).select(
       col("id").as("vec_id"),
@@ -544,22 +534,9 @@ object ScaleProbeAuto {
 object ScaleProbeSampling {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(200000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     import graft.pipeline.TextAnalysis
     import org.apache.spark.sql.expressions.Window
-
-    def time[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$label%-40s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
     // 90% of docs in domain d0; 30-word texts over a scaling vocabulary
     val vocab = math.max(2000, nDocs / 25)
@@ -612,20 +589,7 @@ object ScaleProbeSampling {
 object ScaleProbeContainment {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(50000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def time[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$label%-44s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+    val spark = GraftSession()
 
     val vocab = math.max(2000, nDocs / 25)
     println(s"config: nDocs=$nDocs vocab=$vocab")
@@ -692,20 +656,7 @@ object ScaleProbeContainment {
 object ScaleProbeWinnow {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(20000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def time[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$label%-44s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
+    val spark = GraftSession()
 
     val vocab = math.max(2000, nDocs / 25)
     println(s"config: nDocs=$nDocs vocab=$vocab")
@@ -771,20 +722,7 @@ object ScaleProbeGraph {
     val nodes0 = args.headOption.map(_.toInt).getOrElse(20000)
     val avgDeg = args.drop(1).headOption.map(_.toInt).getOrElse(60)
     val rows0 = args.drop(2).headOption.map(_.toInt).getOrElse(500000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$label%-44s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
+    val spark = GraftSession()
     for (n <- Seq(nodes0, nodes0 * 10)) {
       // deterministic pseudo-random edges: avgDeg per source node
       val edges = spark.range(n.toLong * avgDeg).select(
@@ -829,20 +767,7 @@ object ScaleProbeStats {
   def main(args: Array[String]): Unit = {
     val nodes0 = args.headOption.map(_.toInt).getOrElse(20000)
     val rows0 = args.drop(1).headOption.map(_.toInt).getOrElse(500000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$label%-52s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
+    val spark = GraftSession()
     for (n <- Seq(nodes0, nodes0 * 10)) {
       val avgDeg = 60
       val edges = spark.range(n.toLong * avgDeg).select(
@@ -988,19 +913,7 @@ object ScaleProbeBpeAppend {
     val nDocs = args.headOption.map(_.toInt).getOrElse(200000)
     val batchPct = args.drop(1).headOption.map(_.toInt).getOrElse(2)
     val nWords = args.drop(2).headOption.map(_.toInt).getOrElse(50000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$label%-58s ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
+    val spark = GraftSession()
     // same deterministic corpus family as ScaleProbeBpe; the batch
     // is EXTRA doc ids past the corpus (new mix of mostly-known word
     // types + the alphabet's unseen tail)
@@ -1061,20 +974,7 @@ object ScaleProbeBpe {
     val passes = args.drop(1).headOption.map(_.toInt).getOrElse(16)
     val batch = args.drop(2).headOption.map(_.toInt).getOrElse(8)
     val nWords = args.drop(3).headOption.map(_.toInt).getOrElse(4000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def time[T](label: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"$label%-58s ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
+    val spark = GraftSession()
 
     // deterministic corpus: 12 words/doc drawn zipf-ish from a 4000-word
     // alphabet of 6-14 char words built from 12 letters — enough shared

@@ -1,6 +1,7 @@
 package graft.api
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import graft.GraftSession
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.SparkSession
@@ -131,17 +132,10 @@ object HttpShell {
 
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8080)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName("graft-http-shell")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // one round of the four routes needs about 165 compiled classes;
-      // Spark's default cache of 100 would evict them all every round
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val builder = GraftSession.builder.appName("graft-http-shell")
+    // a master URL is a deployment address, so it stays settable
+    sys.env.get("SPARK_GRAFT_MASTER").foreach(builder.master)
+    val spark = builder.getOrCreate()
     start(spark, port)
     println(s"graft shell listening on :$port (GET /health, POST /analyze, " +
       "POST /saturating-growth[/single]) — Ctrl-C to stop")

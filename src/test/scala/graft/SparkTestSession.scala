@@ -3,24 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (getOrCreate → same JVM-wide
-  * session regardless of suite ordering). */
+  * session regardless of suite ordering). The services' session shape,
+  * pinned to 4 cores so results never depend on the host's size. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the services' compiled-class cache size (HttpShell.main, Bench):
-      // at Spark's default of 100, one /analyze request (about 105
-      // classes) evicts its own classes before the next request
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.warehouse.dir",
-              java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.builder
+    .master("local[4]")
+    .appName("graft-test")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.sql.warehouse.dir",
+            java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    .getOrCreate()
 }
