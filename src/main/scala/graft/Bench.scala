@@ -6,6 +6,26 @@ package graft
   * index-build) and contention inflation; a wall-time budget degrades
   * the rep count instead of overrunning the driver's window. */
 object Bench {
+  // Demoted from the TIMED sf0.1 suite on the q76 precedent (bench
+  // wall-time is the driver's correctness budget — r15's suite grew
+  // past the driver window and shipped NO artifacts). Each demoted
+  // entry re-runs a plan the suite already times AND pins
+  // cell-for-cell elsewhere; all four keep their Verify oracles
+  // (sf0.01 correctness is cheap and stays full-registry):
+  //   q86/q87/q88 — the frame-backed IVF serving rungs re-run the
+  //     q65/q70/q74 oracles over a path whose parity with the
+  //     plan-literal rung is spec-pinned (SimilaritySpec);
+  //   q78 — the pair-join union-find flavor; q66 times the canonical
+  //     flavor and the two are parity-tested by spec.
+  private[graft] val demoted = Set(
+    "q78_dup_clusters_pj", "q86_ivf_ann_frames",
+    "q87_ivf_hier_frames", "q88_ivf_tree_frames")
+
+  /** The queries a run times, sorted: the registered ones `only` names,
+    * demoted ones included; without `only`, all but the demoted. */
+  private[graft] def selected(registered: Set[String], only: Option[Set[String]]): Seq[String] =
+    only.fold(registered -- demoted)(registered.intersect).toSeq.sorted
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession()
@@ -25,27 +45,11 @@ object Bench {
     // higher for the pure-projection family than earlier rounds'.
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    // Demoted from the TIMED sf0.1 suite on the q76 precedent (bench
-    // wall-time is the driver's correctness budget — r15's suite grew
-    // past the driver window and shipped NO artifacts). Each demoted
-    // entry re-runs a plan the suite already times AND pins
-    // cell-for-cell elsewhere; all four keep their Verify oracles
-    // (sf0.01 correctness is cheap and stays full-registry):
-    //   q86/q87/q88 — the frame-backed IVF serving rungs re-run the
-    //     q65/q70/q74 oracles over a path whose parity with the
-    //     plan-literal rung is spec-pinned (SimilaritySpec);
-    //   q78 — the pair-join union-find flavor; q66 times the canonical
-    //     flavor and the two are parity-tested by spec.
-    val excluded = Set(
-      "q78_dup_clusters_pj", "q86_ivf_ann_frames",
-      "q87_ivf_hier_frames", "q88_ivf_tree_frames")
-    // SPARK_GRAFT_BENCH_ONLY=q78_dup_clusters_pj,q82_curate_corpus
-    // restricts the suite to a comma-separated subset — a dev loop for
-    // timing one query's optimization without paying the full suite
+    // SPARK_GRAFT_BENCH_ONLY=q78_dup_clusters_pj,q82_curate_corpus times a
+    // comma-separated subset: a dev loop for one query's optimization
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = (SparkEntry.queries.keySet -- excluded).toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = selected(SparkEntry.queries.keySet, only)
     // NO per-query warmup pass. The suite ran a full-registry sf0.001
     // warmup through r15 so the timed pass would measure steady state —
     // but at 300+ queries the warmup's PER-QUERY FIXED cost dominates

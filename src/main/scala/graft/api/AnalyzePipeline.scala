@@ -1,6 +1,7 @@
 package graft.api
 
-import graft.forecast.{Forecaster, StructuralTS}
+import graft.forecast.Forecaster
+import graft.forecast.StructuralTS.FitSpec
 import graft.queries.cacheOnce
 import graft.stats.Diagnostics
 import graft.ts.{Aggregations, TimeOps}
@@ -77,91 +78,116 @@ object AnalyzePipeline {
       .filter(col("ds").isNotNull && col("y").isNotNull)
   }
 
-  def analyze(documents: Map[String, DataFrame],
-              correlations: Seq[CorrelationSpec]): AnalyzeResult = {
-    require(correlations.nonEmpty, "no correlations requested")
-    val spark = documents.values.head.sparkSession
+  /** One `(series, ds, y)` history per correlation, unioned: the
+    * `side` (document, path) of each, at its grain and aggregation. */
+  private def histories(documents: Map[String, DataFrame], correlations: Seq[CorrelationSpec],
+                        side: CorrelationSpec => (String, String)): DataFrame =
+    correlations.map { c =>
+      val (docName, path) = side(c)
+      val doc = documents.getOrElse(docName,
+        throw new IllegalArgumentException(s"unknown document: $docName"))
+      Aggregations.groupByTime(
+          extractSeries(doc, c.dateColumn, path), c.grain.map(TimeOps.normalizeGrain),
+          c.aggregation)
+        .select(lit(c.id).as("series"), col("ds"), col("y"))
+    }.reduce(_ unionByName _)
 
-    def histories(side: CorrelationSpec => (String, String)): DataFrame =
-      correlations.map { c =>
-        val (docName, path) = side(c)
-        val doc = documents.getOrElse(docName,
-          throw new IllegalArgumentException(s"unknown document: $docName"))
-        Aggregations.groupByTime(
-            extractSeries(doc, c.dateColumn, path), c.grain.map(TimeOps.normalizeGrain),
-            c.aggregation)
-          .select(lit(c.id).as("series"), col("ds"), col("y"))
-      }.reduce(_ unionByName _)
-
-    val covHist = cacheOnce(histories(c => (c.fromData, c.fromIndex)))
-    val tgtHist = cacheOnce(histories(c => (c.toData, c.toIndex)))
-
-    // A5: horizon defaults to EACH side's post-aggregation length
-    // (`prepare_dataset` is called per side, `app.py:115-120/158-163`,
-    // so the covariate grid runs len(cov) periods and the target grid
-    // len(target) periods); per-series counts are a handful of scalars —
-    // and the jobs are SKIPPED entirely when every correlation
-    // specifies unitsToForecast (the common case)
-    def seriesCounts(hist: DataFrame): Map[String, Int] =
-      if (correlations.forall(_.unitsToForecast.isDefined)) Map.empty
+  /** A5: the horizon defaults to the side's post-aggregation length
+    * (`prepare_dataset` is called per side, `app.py:115-120/158-163`, so
+    * the covariate grid runs len(cov) periods and the target grid
+    * len(target) periods). The per-series counts are a handful of
+    * scalars, and the job is skipped when every correlation specifies
+    * unitsToForecast (the common case). */
+  private def horizons(correlations: Seq[CorrelationSpec], hist: DataFrame): Map[String, Int] = {
+    val counts =
+      if (correlations.forall(_.unitsToForecast.isDefined)) Map.empty[String, Int]
       else hist.groupBy("series").count().collect()
         .map(r => r.getString(0) -> r.getLong(1).toInt).toMap
-    val covCounts = seriesCounts(covHist)
-    val tgtCounts = seriesCounts(tgtHist)
-    val covHorizons: Map[String, Int] =
-      correlations.map(c => c.id -> c.unitsToForecast.getOrElse(covCounts.getOrElse(c.id, 1)))
-        .toMap
-    val tgtHorizons: Map[String, Int] =
-      correlations.map(c => c.id -> c.unitsToForecast.getOrElse(tgtCounts.getOrElse(c.id, 1)))
-        .toMap
+    correlations.map(c => c.id -> c.unitsToForecast.getOrElse(counts.getOrElse(c.id, 1))).toMap
+  }
 
-    // resolved logistic bounds (A3/A4): the reference computes
-    // floor/ceiling only for logistic growth (`app.py:354-364`), each
-    // side from ITS OWN series (the bundle's self floor/ceiling,
-    // app.py:503-538); for all-linear requests the stats jobs are
-    // skipped (cap/floor are unused by the linear trend)
-    def capStatsOf(hist: DataFrame, anyLogistic: Boolean): Map[String, (Double, Double, Double)] =
-      if (!anyLogistic) Map.empty
-      else hist.groupBy("series")
-        .agg(max("y").as("mx"), stddev_samp("y").as("sd"), min("y").as("mn"))
-        .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+  /** Per-series (max, stddev, min) for resolving logistic bounds (A3/A4):
+    * the reference computes floor/ceiling only for logistic growth
+    * (`app.py:354-364`), each side from ITS OWN series (the bundle's self
+    * floor/ceiling, app.py:503-538); without logistic growth the job is
+    * skipped (cap/floor are unused by the linear trend). */
+  private def capStatsOf(hist: DataFrame, anyLogistic: Boolean): Map[String, (Double, Double, Double)] =
+    if (!anyLogistic) Map.empty
+    else hist.groupBy("series")
+      .agg(max("y").as("mx"), stddev_samp("y").as("sd"), min("y").as("mn"))
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+
+  /** `fitSpec(floor, cap)`: the user's floor unless the series goes lower;
+    * the user's ceiling, else max + 3 sd, unless the series goes higher. */
+  private def resolve(stats: Map[String, (Double, Double, Double)], id: String,
+                      userFloor: Double, userCeiling: Option[Double])
+                     (fitSpec: (Double, Double) => FitSpec): FitSpec = {
+    val (mx, sd, mn) = stats.getOrElse(id, (1.0, 0.0, 0.0))
+    fitSpec(math.min(userFloor, mn),
+            math.max(userCeiling.getOrElse(mx + 3 * (if (sd.isNaN) 0.0 else sd)), mx))
+  }
+
+  /** Each correlation's target fit spec, with its bounds resolved. */
+  private def targetSpecs(correlations: Seq[CorrelationSpec],
+                          stats: Map[String, (Double, Double, Double)]): Map[String, FitSpec] =
+    correlations.map(c => c.id -> resolve(stats, c.id, c.floor, c.ceiling)(c.fitSpec)).toMap
+
+  /** The future grid of every series; grains can differ per
+    * correlation, so one grid per distinct grain. */
+  private def gridFor(correlations: Seq[CorrelationSpec], hist: DataFrame,
+                      horizons: Map[String, Int]): DataFrame = {
+    val grainOf = correlations
+      .map(c => c.id -> c.grain.map(TimeOps.normalizeGrain).getOrElse("D")).toMap
+    grainOf.values.toSeq.distinct.map { g =>
+      val ids = grainOf.collect { case (id, gg) if gg == g => id }.toSeq
+      Forecaster.futureGrid(hist.filter(col("series").isin(ids: _*)), g,
+                            horizon = 1, horizonOverrides = horizons)
+    }.reduce(_ unionByName _)
+  }
+
+  /** The histories tagged with their `side` ("from" or "to"), unioned. */
+  private def bySide(hists: Seq[(String, DataFrame)]): DataFrame =
+    hists.map { case (side, hist) => hist.withColumn("side", lit(side)) }.reduce(_ unionByName _)
+
+  /** A2: date bounds and length per series and side. */
+  private def boundsOf(hists: Seq[(String, DataFrame)]): DataFrame =
+    bySide(hists).groupBy("series", "side")
+      .agg(min("ds").as("min_ds"), max("ds").as("max_ds"), count(lit(1)).as("n"))
+
+  /** Both entry points take correlations whose ids name their series:
+    * two correlations with one id (a missing id defaults to "c0") would
+    * be unioned into one series, fitted as one model and returned as
+    * one entry. */
+  private def requireValid(correlations: Seq[CorrelationSpec]): Unit = {
+    require(correlations.nonEmpty, "no correlations requested")
+    val dups = correlations.groupBy(_.id).collect { case (id, cs) if cs.size > 1 => id }
+    require(dups.isEmpty, s"duplicate correlation id: ${dups.toSeq.sorted.mkString(", ")} " +
+      "(each correlation needs its own id)")
+  }
+
+  def analyze(documents: Map[String, DataFrame],
+              correlations: Seq[CorrelationSpec]): AnalyzeResult = {
+    requireValid(correlations)
+    val covHist = cacheOnce(histories(documents, correlations, c => (c.fromData, c.fromIndex)))
+    val tgtHist = cacheOnce(histories(documents, correlations, c => (c.toData, c.toIndex)))
+    val covHorizons = horizons(correlations, covHist)
+    val tgtHorizons = horizons(correlations, tgtHist)
+
     val capStats = capStatsOf(tgtHist, correlations.exists(_.growth == "logistic"))
     val covCapStats = capStatsOf(covHist,
       correlations.exists(_.covOptions.exists(_.growth == "logistic")))
-    def resolve(stats: Map[String, (Double, Double, Double)], id: String,
-                userFloor: Double, userCeiling: Option[Double]): (Double, Double) = {
-      val (mx, sd, mn) = stats.getOrElse(id, (1.0, 0.0, 0.0))
-      (math.min(userFloor, mn),
-       math.max(userCeiling.getOrElse(mx + 3 * (if (sd.isNaN) 0.0 else sd)), mx))
-    }
-    val specOverrides: Map[String, StructuralTS.FitSpec] = correlations.map { c =>
-      val (floor, cap) = resolve(capStats, c.id, c.floor, c.ceiling)
-      c.id -> c.fitSpec(floor, cap)
-    }.toMap
+    val specOverrides = targetSpecs(correlations, capStats)
     // §3.2 covariate-side options (ForecastingOptions.fromIndex) when
     // present; otherwise the covariate fits with the correlation's spec
     // (the /analyze behavior: one changepoint prior for both fits)
-    val covSpecOverrides: Map[String, StructuralTS.FitSpec] = correlations.map { c =>
-      c.id -> c.covOptions.map { o =>
-        val (floor, cap) = resolve(covCapStats, c.id, o.floor, o.ceiling)
-        o.fitSpec(floor, cap)
-      }.getOrElse(specOverrides(c.id))
-    }.toMap
+    val covSpecOverrides = correlations.map(c => c.id -> c.covOptions
+      .map(o => resolve(covCapStats, c.id, o.floor, o.ceiling)(o.fitSpec))
+      .getOrElse(specOverrides(c.id))).toMap
     val defaultSpec = specOverrides(correlations.head.id)
     val defaultCovSpec = covSpecOverrides(correlations.head.id)
 
-    // grains can differ per correlation; one grid per distinct grain
-    val grainOf: Map[String, String] =
-      correlations.map(c => c.id -> c.grain.map(TimeOps.normalizeGrain).getOrElse("D")).toMap
-    def gridFor(hist: DataFrame, horizons: Map[String, Int]): DataFrame =
-      grainOf.values.toSeq.distinct.map { g =>
-        val ids = grainOf.collect { case (id, gg) if gg == g => id }.toSeq
-        Forecaster.futureGrid(hist.filter(col("series").isin(ids: _*)), g,
-                              horizon = 1, horizonOverrides = horizons)
-      }.reduce(_ unionByName _)
-
     // C3: covariate forecasts over history + future (covariate-side spec)
-    val covForecast = Forecaster.forecast(covHist, gridFor(covHist, covHorizons),
+    val covForecast = Forecaster.forecast(covHist, gridFor(correlations, covHist, covHorizons),
                                           defaultCovSpec, "series", covSpecOverrides)
 
     // J1+J2: observed covariate wins, forecast fills the future
@@ -176,7 +202,8 @@ object AnalyzePipeline {
       .withColumn("x", coalesce(col("x"), lit(0.0)))
     // J4-as-inner also reproduces the reference's dropna: target-future
     // dates beyond the covariate's forecast coverage are dropped
-    val tgtFuture = gridFor(tgtHist, tgtHorizons).join(covX, Seq("series", "ds"), "inner")
+    val tgtFuture = gridFor(correlations, tgtHist, tgtHorizons)
+      .join(covX, Seq("series", "ds"), "inner")
 
     // C4/C8: target forecast with the covariate as regressor
     val tgtForecast = Forecaster.forecast(tgtHistX, tgtFuture,
@@ -214,19 +241,14 @@ object AnalyzePipeline {
     val uniIds = correlations.filter(_.corrType == "univariateStatistics").map(_.id)
     val univariate: Option[DataFrame] =
       if (uniIds.isEmpty) None
-      else Some(covHist.withColumn("side", lit("from"))
-        .unionByName(tgtHist.withColumn("side", lit("to")))
+      else Some(bySide(Seq("from" -> covHist, "to" -> tgtHist))
         .filter(col("series").isin(uniIds: _*))
         .groupBy("series", "side")
         .agg(count(lit(1)).as("n"), avg("y").as("mean"),
              stddev_samp("y").as("std"), min("y").as("min"), max("y").as("max"),
              skewness(col("y")).as("skewness"), kurtosis(col("y")).as("kurtosis")))
 
-    // A2 date bounds per series/side
-    val bounds = covHist.withColumn("side", lit("from"))
-      .unionByName(tgtHist.withColumn("side", lit("to")))
-      .groupBy("series", "side")
-      .agg(min("ds").as("min_ds"), max("ds").as("max_ds"), count(lit(1)).as("n"))
+    val bounds = boundsOf(Seq("from" -> covHist, "to" -> tgtHist))
 
     AnalyzeResult(covSpliced, tgtForecast, diag, coefs, bounds,
                   specOverrides.map { case (id, s) => id -> (s.floor, s.cap) },
@@ -244,55 +266,19 @@ object AnalyzePipeline {
     * as the bundle's cached `floor`/`ceiling` properties. */
   def analyzeSingle(documents: Map[String, DataFrame],
                     correlations: Seq[CorrelationSpec]): AnalyzeResult = {
-    require(correlations.nonEmpty, "no correlations requested")
-
-    val hist = cacheOnce(correlations.map { c =>
-      val doc = documents.getOrElse(c.toData,
-        throw new IllegalArgumentException(s"unknown document: ${c.toData}"))
-      Aggregations.groupByTime(
-          extractSeries(doc, c.dateColumn, c.toIndex), c.grain.map(TimeOps.normalizeGrain),
-          c.aggregation)
-        .select(lit(c.id).as("series"), col("ds"), col("y"))
-    }.reduce(_ unionByName _))
-
-    val counts: Map[String, Int] =
-      if (correlations.forall(_.unitsToForecast.isDefined)) Map.empty
-      else hist.groupBy("series").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1).toInt).toMap
-    val horizons = correlations
-      .map(c => c.id -> c.unitsToForecast.getOrElse(counts.getOrElse(c.id, 1))).toMap
-
-    val capStats: Map[String, (Double, Double, Double)] =
-      if (correlations.forall(_.growth == "linear")) Map.empty
-      else hist.groupBy("series")
-        .agg(max("y").as("mx"), stddev_samp("y").as("sd"), min("y").as("mn"))
-        .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-        .toMap
-    val specOverrides = correlations.map { c =>
-      val (mx, sd, mn) = capStats.getOrElse(c.id, (1.0, 0.0, 0.0))
-      val cap = math.max(c.ceiling.getOrElse(mx + 3 * (if (sd.isNaN) 0.0 else sd)), mx)
-      c.id -> c.fitSpec(math.min(c.floor, mn), cap)
-    }.toMap
-
-    val grainOf = correlations
-      .map(c => c.id -> c.grain.map(TimeOps.normalizeGrain).getOrElse("D")).toMap
-    val grid = grainOf.values.toSeq.distinct.map { g =>
-      val ids = grainOf.collect { case (id, gg) if gg == g => id }.toSeq
-      Forecaster.futureGrid(hist.filter(col("series").isin(ids: _*)), g,
-                            horizon = 1, horizonOverrides = horizons)
-    }.reduce(_ unionByName _)
-
-    val forecast = Forecaster.forecast(hist, grid,
+    requireValid(correlations)
+    val hist = cacheOnce(histories(documents, correlations, c => (c.toData, c.toIndex)))
+    val horizon = horizons(correlations, hist)
+    val specOverrides = targetSpecs(correlations,
+      capStatsOf(hist, correlations.exists(_.growth == "logistic")))
+    val forecast = Forecaster.forecast(hist, gridFor(correlations, hist, horizon),
       specOverrides(correlations.head.id), "series", specOverrides)
     val diag = Diagnostics.acfPacf(hist, "series").withColumn("side", lit("to"))
-    val bounds = hist.withColumn("side", lit("to"))
-      .groupBy("series", "side")
-      .agg(min("ds").as("min_ds"), max("ds").as("max_ds"), count(lit(1)).as("n"))
 
     AnalyzeResult(forecast.limit(0), forecast, diag,
-                  forecast.sparkSession.emptyDataFrame, bounds,
+                  forecast.sparkSession.emptyDataFrame, boundsOf(Seq("to" -> hist)),
                   specOverrides.map { case (id, s) => id -> (s.floor, s.cap) },
-                  horizons.map { case (id, h) => id -> (h, h) },
+                  horizon.map { case (id, h) => id -> (h, h) },
                   cachedFrames = Seq(hist))
   }
 }

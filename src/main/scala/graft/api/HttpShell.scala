@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Run: `runMain graft.api.HttpShell [port]` then e.g.
   * `curl -s localhost:8080/health` and
-  * `curl -s -XPOST localhost:8080/analyze -d @/root/reference/example-timestamp.json`.
+  * `curl -s -XPOST localhost:8080/analyze -d @src/test/resources/requests/daily_nested.json`.
   *
   * Request-scoped caches are released via `AnalyzeResult.close()` after
   * each response is serialized, so a long-running shell does not
@@ -49,11 +49,9 @@ object HttpShell {
         val (code, body) =
           try inSession(spark) {
             route match {
-              case "health" =>
-                if (ex.getRequestMethod == "GET") (200, "null")
-                else (405, """{"detail": "Method Not Allowed"}""")
-              case _ if ex.getRequestMethod != "POST" =>
-                (405, """{"detail": "Method Not Allowed"}""")
+              case "health" if ex.getRequestMethod == "GET" => (200, "null")
+              case _ if route == "health" || ex.getRequestMethod != "POST" =>
+                (405, ResponseAssembly.errorJson("Method Not Allowed"))
               case which =>
                 val req = new String(ex.getRequestBody.readAllBytes(), UTF_8)
                 val parsed = RequestParser.parse(spark, req)
@@ -74,15 +72,14 @@ object HttpShell {
             // FastAPI status split: request-shaped failures are
             // pydantic 422s (`app.py:31-67`); anything else is a 500
             case e: Exception =>
-              val msg = ResponseAssembly.esc(
-                Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
               val code = e match {
                 case _: IllegalArgumentException => 422 // bad spec/path/grain
                 case _: org.apache.spark.sql.AnalysisException => 422 // unparseable envelope
                 case _: NoSuchElementException => 422 // missing required field
                 case _ => 500
               }
-              (code, s"""{"detail": "$msg"}""")
+              (code, ResponseAssembly.errorJson(
+                Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
           }
         val bytes = body.getBytes(UTF_8)
         ex.getResponseHeaders.set("Content-Type", "application/json")

@@ -1,6 +1,9 @@
 package graft.api
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
+import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
 import graft.api.AnalyzePipeline.AnalyzeResult
+import java.io.StringWriter
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -10,7 +13,10 @@ import org.apache.spark.sql.functions._
   * per-correlation aggregates (bounded by horizon × correlations, not by
   * input size), mirroring the reference's response-sized payloads.
   * Divergence from §2.9: ALL correlations are returned, not just the
-  * first. */
+  * first.
+  *
+  * Every body, error bodies included, is written by one Jackson
+  * generator on one line: `{"a": "x", "lags": {}, "n": [1.5, null, 7]}`. */
 object ResponseAssembly {
 
   // explicit UTC render — Timestamp.toString would use the driver JVM's
@@ -19,47 +25,87 @@ object ResponseAssembly {
     .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(java.time.ZoneOffset.UTC)
   private def fmtTs(ts: java.sql.Timestamp): String = tsFmt.format(ts.toInstant)
 
-  private[api] def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private val factory = new JsonFactory()
+  // one space after `:` and `,`, no newlines, `{}` and `[]` when empty
+  private val printer = new DefaultPrettyPrinter(Separators.createDefaultInstance()
+      .withObjectFieldValueSpacing(Separators.Spacing.AFTER)
+      .withObjectEntrySpacing(Separators.Spacing.AFTER)
+      .withArrayValueSpacing(Separators.Spacing.AFTER)
+      .withObjectEmptySeparator("").withArrayEmptySeparator(""))
+    .withObjectIndenter(new DefaultPrettyPrinter.NopIndenter)
+    .withArrayIndenter(new DefaultPrettyPrinter.NopIndenter)
 
-  private def num(v: Double): String =
-    if (v.isNaN || v.isInfinite) "null" else {
-      val bd = BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-      bd.bigDecimal.stripTrailingZeros.toPlainString
-    }
-
-  private def lagMap(rows: Seq[Row], valueIdx: Int): String =
-    rows.sortBy(_.getInt(1)).map(r => s""""${r.getInt(1)}": ${num(r.getDouble(valueIdx))}""")
-      .mkString("{", ", ", "}")
-
-  /** One `Prediction` record: the full 13-column contract
-    * (`responses.py:20-33` — P3 rename map `app.py:336-352`). */
-  private def forecastRow(r: Row): String = {
-    val cols = Seq("yhat" -> "prediction", "yhat_lower" -> "prediction_lower_bound",
-                   "yhat_upper" -> "prediction_upper_bound", "trend" -> "trend",
-                   "trend_lower" -> "trend_lower_bound", "trend_upper" -> "trend_upper_bound",
-                   "additive_terms" -> "additive_terms",
-                   "additive_terms_lower" -> "additive_terms_lower",
-                   "additive_terms_upper" -> "additive_terms_upper",
-                   "multiplicative_terms" -> "multiplicative_terms",
-                   "multiplicative_terms_lower" -> "multiplicative_terms_lower",
-                   "multiplicative_terms_upper" -> "multiplicative_terms_upper")
-    val ds = fmtTs(r.getAs[java.sql.Timestamp]("ds"))
-    val vals = cols.map { case (src, dst) => s""""$dst": ${num(r.getAs[Double](src))}""" }
-    (s""""date": "$ds"""" +: vals).mkString("{", ", ", "}")
+  private def write(body: JsonGenerator => Unit): String = {
+    val out = new StringWriter()
+    val g = factory.createGenerator(out)
+    g.setPrettyPrinter(printer.createInstance())
+    try { g.writeStartObject(); body(g); g.writeEndObject() } finally g.close()
+    out.toString
   }
 
-  private val forecastCols = Seq(
-    "series", "ds", "segment", "yhat", "yhat_lower", "yhat_upper",
-    "trend", "trend_lower", "trend_upper",
-    "additive_terms", "additive_terms_lower", "additive_terms_upper",
-    "multiplicative_terms", "multiplicative_terms_lower", "multiplicative_terms_upper")
+  private def obj(g: JsonGenerator, name: String)(body: => Unit): Unit = {
+    g.writeObjectFieldStart(name); body; g.writeEndObject()
+  }
+
+  /** An array field with one object per row, its fields written by `fields`. */
+  private def objects(g: JsonGenerator, name: String, rows: Array[Row])
+                     (fields: Row => Unit): Unit = {
+    g.writeArrayFieldStart(name)
+    rows.foreach { r => g.writeStartObject(); fields(r); g.writeEndObject() }
+    g.writeEndArray()
+  }
+
+  /** An error body: `{"detail": "…"}`, FastAPI's shape. */
+  def errorJson(detail: String): String = write(_.writeStringField("detail", detail))
+
+  /** A double rounded half-up to 6 places, trailing zeros stripped and
+    * never in exponent form (`100`, `0.5`); null for NaN and infinities. */
+  private def num(g: JsonGenerator, name: String, v: Double): Unit = {
+    g.writeFieldName(name)
+    if (v.isNaN || v.isInfinite) g.writeNull()
+    else g.writeNumber(BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+      .bigDecimal.stripTrailingZeros.toPlainString)
+  }
+
+  /** `names` as [[num]] fields of `r`'s columns `from`, `from + 1`, …;
+    * a null column is a null field. */
+  private def nums(g: JsonGenerator, r: Row, from: Int, names: String*): Unit =
+    names.zipWithIndex.foreach { case (name, i) =>
+      if (r.isNullAt(from + i)) g.writeNullField(name) else num(g, name, r.getDouble(from + i))
+    }
+
+  /** Forecast columns → `Prediction` record fields (`responses.py:20-33`,
+    * P3 rename map `app.py:336-352`). */
+  private val predictionFields = Seq(
+      "yhat" -> "prediction", "yhat_lower" -> "prediction_lower_bound",
+      "yhat_upper" -> "prediction_upper_bound", "trend" -> "trend",
+      "trend_lower" -> "trend_lower_bound", "trend_upper" -> "trend_upper_bound") ++
+    Seq("additive_terms", "additive_terms_lower", "additive_terms_upper", "multiplicative_terms",
+        "multiplicative_terms_lower", "multiplicative_terms_upper").map(c => c -> c)
+  private val predictionNames = predictionFields.map(_._2)
+
+  /** The target forecast rows of every series, collected once:
+    * (series, ds, segment, the `predictionFields` columns). */
+  private def forecastsOf(result: AnalyzeResult): Map[String, Array[Row]] =
+    result.targetForecasts.select(("series" +: "ds" +: "segment" +: predictionFields.map(_._1))
+        .map(col): _*)
+      .collect().groupBy(_.getString(0))
+
+  /** `historicalForecasts` and `futureForecasts`: one series' rows split
+    * by segment, each sorted by date, as `Prediction` records. */
+  private def writeForecasts(g: JsonGenerator, rows: Array[Row]): Unit =
+    for ((field, segment) <- Seq("historicalForecasts" -> "historical",
+                                 "futureForecasts" -> "future")) {
+      val dated = rows.filter(_.getString(2) == segment).sortBy(_.getTimestamp(1).getTime)
+      objects(g, field, dated) { r =>
+        g.writeStringField("date", fmtTs(r.getTimestamp(1)))
+        nums(g, r, 3, predictionNames: _*)
+      }
+    }
+
+  /** `{"correlations": {id: {…}, …}}` with `entry` writing each id's fields. */
+  private def correlationsJson(ids: Seq[String])(entry: (JsonGenerator, String) => Unit): String =
+    write(g => obj(g, "correlations")(ids.foreach(id => obj(g, id)(entry(g, id)))))
 
   /** Build the full `/analyze`-shaped JSON response (`app.py:211-247`):
     * per correlation — `type`; `diagnostics` with the grain as `units`
@@ -70,20 +116,11 @@ object ResponseAssembly {
     * `specs` supply the per-correlation request fields the reference
     * echoes back (document names, index paths, grain).
     *
-    * TWO reference shapes exist and we support both explicitly:
-    * `app.py:211-247` assembles a dict with per-side `data` fields and
-    * `autocorrelations`/`partialAutocorrelations` blocks, but FastAPI's
-    * `response_model=AnalyticsResponse` filtering strips everything not
-    * in `responses.py` — `IndexResponse` has no `data` field and
-    * `CorrelationResponse` has no ACF/PACF blocks — so the on-the-wire
-    * JSON is a strict subset. Default (`servedContract = false`) is the
-    * richer assembled dict: the ACF/PACF diagnostics are the point of
-    * the "LLM context" product and silently computing-then-dropping
-    * them (what the reference actually does) is treated as a contract
-    * bug, documented here. `servedContract = true` emits exactly the
-    * post-filter wire shape for byte-level reference compatibility. */
-  def toJson(result: AnalyzeResult, specs: Seq[CorrelationSpec],
-             servedContract: Boolean = false): String = {
+    * This is the dict `app.py:211-247` assembles. The reference's
+    * `response_model` filter drops its `data` fields and ACF/PACF blocks
+    * (`responses.py:6-10, 49-53`); those diagnostics are the point of the
+    * "LLM context" product, so they are served. */
+  def toJson(result: AnalyzeResult, specs: Seq[CorrelationSpec]): String = {
     val specOf = specs.map(c => c.id -> c).toMap
     val diag = result.diagnostics.collect().groupBy(r => (r.getString(0), r.getString(4)))
     val bounds = result.bounds.collect()
@@ -93,91 +130,72 @@ object ResponseAssembly {
       .map(_.collect().groupBy(_.getString(0))).getOrElse(Map.empty)
     val uniRows = result.univariate
       .map(_.collect().groupBy(_.getString(0))).getOrElse(Map.empty)
-    val forecasts = result.targetForecasts
-      .select(forecastCols.map(col): _*)
-      .collect().groupBy(_.getString(0))
+    val forecasts = forecastsOf(result)
 
-    val ids = forecasts.keySet ++ diag.keys.map(_._1)
-    val correlations = ids.toSeq.sorted.map { id =>
-      val fc = forecasts.getOrElse(id, Array.empty)
-      val hist = fc.filter(_.getString(2) == "historical").sortBy(_.getAs[java.sql.Timestamp]("ds").getTime)
-      val fut = fc.filter(_.getString(2) == "future").sortBy(_.getAs[java.sql.Timestamp]("ds").getTime)
+    correlationsJson((forecasts.keySet ++ diag.keys.map(_._1)).toSeq.sorted) { (g, id) =>
       val spec = specOf.get(id)
       val (fromH, toH) = result.horizons.getOrElse(id, (0, 0))
-      def sideJson(side: String): String = {
-        val (doc, idx, h) =
-          if (side == "from") (spec.map(_.fromData), spec.map(_.fromIndex), fromH)
-          else (spec.map(_.toData), spec.map(_.toIndex), toH)
-        // "data" is app.py-dict-only: IndexResponse (responses.py:6-10)
-        // filters it from the served JSON
-        val names =
-          if (servedContract) idx.map(i => s""""index": "${esc(i)}", """).getOrElse("")
-          else doc.map(d => s""""data": "${esc(d)}", "index": "${esc(idx.get)}", """)
-            .getOrElse("")
-        bounds.get((id, side)).map { b =>
-          s"""{$names"minDate": "${fmtTs(b.getAs[java.sql.Timestamp]("min_ds"))}", "maxDate": "${fmtTs(b.getAs[java.sql.Timestamp]("max_ds"))}", "unitsForecasted": $h}"""
-        }.getOrElse(s"{$names}")
-      }
-      def acfJson(side: String): String =
-        diag.get((id, side)).map(rs => lagMap(rs.toSeq, 2)).getOrElse("{}")
-      def pacfJson(side: String): String =
-        diag.get((id, side)).map(rs => lagMap(rs.toSeq, 3)).getOrElse("{}")
       val regName = spec.map(_.fromIndex).getOrElse("x")
-      val coefJson = coefs.getOrElse(id, Array.empty).map { r =>
-        s"""{"regressor": "${esc(regName)}", "regressor_mode": "${esc(r.getString(1))}", "center": ${num(r.getDouble(2))}, "coef_lower": ${num(r.getDouble(3))}, "coef": ${num(r.getDouble(4))}, "coef_upper": ${num(r.getDouble(5))}}"""
-      }.mkString("[", ", ", "]")
-      val units = spec.flatMap(_.grain).getOrElse("D")
-
-      // CorrelationResponse (responses.py:49-53) has no ACF/PACF blocks:
-      // the wire shape drops what app.py:229-239 computed
-      val acfBlocks = if (servedContract) "" else
-        s"""  "autocorrelations": {"description": "${esc(Explanations.autocorrelation)}",
-           |    "from": {"lags": ${acfJson("from")}}, "to": {"lags": ${acfJson("to")}}},
-           |  "partialAutocorrelations": {"description": "${esc(Explanations.partialAutocorrelation)}",
-           |    "from": {"lags": ${pacfJson("from")}}, "to": {"lags": ${pacfJson("to")}}},
-           |""".stripMargin
-      // request `type` is echoed on both shapes (the served Literal
-      // responses.py:51 admits "granger" but not "univariateStatistics"
-      // — the reference never sets a non-default type, so its response
-      // model was never exercised; echoing is the consistent choice).
-      // The C9/C12 blocks — shapes the reference declares but never
-      // ships — join the ACF/PACF blocks on the richer side of the
-      // contract only
+      // `type` is echoed; the C9/C12 blocks are shapes the reference
+      // declares (responses.py:51) but never ships
       val corrType = spec.map(_.corrType).getOrElse("prophet")
-      val grangerBlock =
-        if (servedContract || corrType != "granger") "" else {
-          // all four statsmodels statistics per lag (`Untitled.ipynb`
-          // cell 12 prints ssr_ftest/ssr_chi2test/lrtest/params_ftest)
-          val lags = grangerRows.getOrElse(id, Array.empty).sortBy(_.getInt(1)).map { r =>
-            s""""${r.getInt(1)}": {"fStat": ${num(r.getDouble(2))}, "pValue": ${num(r.getDouble(3))}, "dfNum": ${r.getInt(4)}, "dfDenom": ${r.getInt(5)}, "ssrChi2": ${num(r.getDouble(6))}, "pChi2": ${num(r.getDouble(7))}, "lr": ${num(r.getDouble(8))}, "pLr": ${num(r.getDouble(9))}, "paramsF": ${num(r.getDouble(10))}, "pParamsF": ${num(r.getDouble(11))}}"""
-          }.mkString("{", ", ", "}")
-          s"""  "grangerCausality": {"causeIndex": "${esc(spec.map(_.fromIndex).getOrElse("x"))}", "lags": $lags},
-             |""".stripMargin
+      g.writeStringField("type", corrType)
+      if (corrType == "granger") obj(g, "grangerCausality") {
+        // all four statsmodels statistics per lag (`Untitled.ipynb`
+        // cell 12 prints ssr_ftest/ssr_chi2test/lrtest/params_ftest)
+        g.writeStringField("causeIndex", regName)
+        obj(g, "lags")(grangerRows.getOrElse(id, Array.empty).sortBy(_.getInt(1)).foreach { r =>
+          obj(g, r.getInt(1).toString) {
+            nums(g, r, 2, "fStat", "pValue")
+            g.writeNumberField("dfNum", r.getInt(4))
+            g.writeNumberField("dfDenom", r.getInt(5))
+            nums(g, r, 6, "ssrChi2", "pChi2", "lr", "pLr", "paramsF", "pParamsF")
+          }
+        })
+      }
+      // stddev_samp is NULL for n=1 and skewness/kurtosis for n<3: null
+      // fields, not a 500
+      if (corrType == "univariateStatistics") obj(g, "univariateStatistics") {
+        for (side <- Seq("from", "to")) obj(g, side) {
+          uniRows.getOrElse(id, Array.empty).find(_.getString(1) == side).foreach { r =>
+            g.writeNumberField("count", r.getLong(2))
+            nums(g, r, 3, "mean", "std", "min", "max", "skewness", "kurtosis")
+          }
         }
-      val uniBlock =
-        if (servedContract || corrType != "univariateStatistics") "" else {
-          def sideStats(side: String): String =
-            uniRows.getOrElse(id, Array.empty).find(_.getString(1) == side).map { r =>
-              // stddev_samp is NULL for n=1 and skewness/kurtosis for
-              // n<3; Row.getDouble throws on null, which would turn a
-              // short series into a 500 instead of a response
-              def nnum(i: Int): String = if (r.isNullAt(i)) "null" else num(r.getDouble(i))
-              s"""{"count": ${r.getLong(2)}, "mean": ${nnum(3)}, "std": ${nnum(4)}, "min": ${nnum(5)}, "max": ${nnum(6)}, "skewness": ${nnum(7)}, "kurtosis": ${nnum(8)}}"""
-            }.getOrElse("{}")
-          s"""  "univariateStatistics": {"from": ${sideStats("from")}, "to": ${sideStats("to")}},
-             |""".stripMargin
+      }
+      obj(g, "diagnostics") {
+        g.writeStringField("units", spec.flatMap(_.grain).getOrElse("D"))
+        for ((side, names, h) <- Seq(("from", spec.map(c => (c.fromData, c.fromIndex)), fromH),
+                                     ("to", spec.map(c => (c.toData, c.toIndex)), toH)))
+          obj(g, side) {
+            names.foreach { case (doc, idx) =>
+              g.writeStringField("data", doc)
+              g.writeStringField("index", idx)
+            }
+            bounds.get((id, side)).foreach { b =>
+              g.writeStringField("minDate", fmtTs(b.getTimestamp(2)))
+              g.writeStringField("maxDate", fmtTs(b.getTimestamp(3)))
+              g.writeNumberField("unitsForecasted", h)
+            }
+          }
+      }
+      for ((block, description, valueIdx) <- Seq(
+             ("autocorrelations", Explanations.autocorrelation, 2),
+             ("partialAutocorrelations", Explanations.partialAutocorrelation, 3)))
+        obj(g, block) {
+          g.writeStringField("description", description)
+          for (side <- Seq("from", "to")) obj(g, side)(obj(g, "lags") {
+            diag.getOrElse((id, side), Array.empty).sortBy(_.getInt(1))
+              .foreach(r => num(g, r.getInt(1).toString, r.getDouble(valueIdx)))
+          })
         }
-      s""""${esc(id)}": {
-         |  "type": "${esc(corrType)}",
-         |$grangerBlock$uniBlock  "diagnostics": {"units": "${esc(units)}",
-         |    "from": ${sideJson("from")}, "to": ${sideJson("to")}},
-         |$acfBlocks  "regressorCoefficients": $coefJson,
-         |  "predictions": {
-         |    "historicalForecasts": ${hist.map(forecastRow).mkString("[", ", ", "]")},
-         |    "futureForecasts": ${fut.map(forecastRow).mkString("[", ", ", "]")}}
-         |}""".stripMargin
+      objects(g, "regressorCoefficients", coefs.getOrElse(id, Array.empty)) { r =>
+        g.writeStringField("regressor", regName)
+        g.writeStringField("regressor_mode", r.getString(1))
+        nums(g, r, 2, "center", "coef_lower", "coef", "coef_upper")
+      }
+      obj(g, "predictions")(writeForecasts(g, forecasts.getOrElse(id, Array.empty)))
     }
-    correlations.mkString("{\"correlations\": {", ", ", "}}")
   }
 
   /** Build the saturating-growth response shape (`app.py:544-557`,
@@ -189,31 +207,24 @@ object ResponseAssembly {
     * index), not the logistic floor/cap. */
   def toJsonSaturating(result: AnalyzeResult,
                        growthOf: Map[String, String]): String = {
-    val dateBounds = result.bounds.collect()
-      .filter(_.getString(1) == "to")
-      .map(r => r.getString(0) ->
-        (r.getAs[java.sql.Timestamp]("min_ds"), r.getAs[java.sql.Timestamp]("max_ds")))
-      .toMap
-    val forecasts = result.targetForecasts
-      .select(forecastCols.map(col): _*)
-      .collect().groupBy(_.getString(0))
-    val correlations = forecasts.keySet.toSeq.sorted.map { id =>
-      val fc = forecasts.getOrElse(id, Array.empty)
-      val hist = fc.filter(_.getString(2) == "historical")
-        .sortBy(_.getAs[java.sql.Timestamp]("ds").getTime)
-      val fut = fc.filter(_.getString(2) == "future")
-        .sortBy(_.getAs[java.sql.Timestamp]("ds").getTime)
-      val growth = growthOf.getOrElse(id, "linear")
-      val boundsJson = dateBounds.get(id).map { case (lo, hi) =>
-        s""", "bounds": {"min": "${fmtTs(lo)}", "max": "${fmtTs(hi)}"}"""
-      }.getOrElse("")
-      s""""${esc(id)}": {
-         |  "type": {"model": "prophet", "growth": "${esc(growth)}"$boundsJson},
-         |  "predictions": {"description": "${esc(Explanations.predictions)}",
-         |    "historicalForecasts": ${hist.map(forecastRow).mkString("[", ", ", "]")},
-         |    "futureForecasts": ${fut.map(forecastRow).mkString("[", ", ", "]")}}
-         |}""".stripMargin
+    val dateBounds = result.bounds.collect().filter(_.getString(1) == "to")
+      .map(r => r.getString(0) -> r).toMap
+    val forecasts = forecastsOf(result)
+    correlationsJson(forecasts.keySet.toSeq.sorted) { (g, id) =>
+      obj(g, "type") {
+        g.writeStringField("model", "prophet")
+        g.writeStringField("growth", growthOf.getOrElse(id, "linear"))
+        dateBounds.get(id).foreach { b =>
+          obj(g, "bounds") {
+            g.writeStringField("min", fmtTs(b.getTimestamp(2)))
+            g.writeStringField("max", fmtTs(b.getTimestamp(3)))
+          }
+        }
+      }
+      obj(g, "predictions") {
+        g.writeStringField("description", Explanations.predictions)
+        writeForecasts(g, forecasts(id))
+      }
     }
-    correlations.mkString("{\"correlations\": {", ", ", "}}")
   }
 }

@@ -192,13 +192,6 @@ class ApiSpec extends AnyFunSuite {
       // prophet surface still present alongside (the reference runs the
       // prophet path for every type; the C9 block is additive)
       assert(corr.get("predictions").get("futureForecasts").size == 3)
-
-      // the served Literal admits "granger" but CorrelationResponse has
-      // no granger field — wire shape keeps the type, drops the block
-      val served = mapper.readTree(
-          ResponseAssembly.toJson(result, parsed.correlations, servedContract = true))
-        .get("correlations").get("g1")
-      assert(served.get("type").asText == "granger" && !served.has("grangerCausality"))
     } finally result.close()
   }
 
@@ -224,12 +217,6 @@ class ApiSpec extends AnyFunSuite {
         assert(s.get("std").asDouble > 0 && s.has("skewness") && s.has("kurtosis"))
       }
       assert(uni.get("to").get("mean").asDouble > 1000)
-      // wire shape: type still echoed, the extra block is filtered
-      val served = mapper.readTree(
-          ResponseAssembly.toJson(result, parsed.correlations, servedContract = true))
-        .get("correlations").get("corr1")
-      assert(served.get("type").asText == "univariateStatistics" &&
-             !served.has("univariateStatistics"))
     } finally result.close()
   }
 
@@ -288,19 +275,6 @@ class ApiSpec extends AnyFunSuite {
     for (k <- Seq("date", "prediction", "prediction_lower_bound", "trend",
                   "additive_terms", "multiplicative_terms_upper"))
       assert(firstHist.has(k), s"prediction record missing $k")
-
-    // servedContract = the post-response_model-filter wire shape:
-    // IndexResponse has no "data" field and CorrelationResponse has no
-    // ACF/PACF blocks (responses.py:6-10, 49-53); everything else stays
-    val served = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(ResponseAssembly.toJson(result, specs, servedContract = true))
-    val sc = served.get("correlations").get("corr1")
-    assert(!sc.has("autocorrelations") && !sc.has("partialAutocorrelations"))
-    val scFrom = sc.get("diagnostics").get("from")
-    assert(!scFrom.has("data") && scFrom.has("index") &&
-           scFrom.get("unitsForecasted").asInt == 7)
-    assert(sc.get("predictions").get("historicalForecasts").size ==
-           corr.get("predictions").get("historicalForecasts").size)
   }
 
   test("electricity-demand-style request: mixed dd-MM-yyyy dates, hourly grain, 3 correlations") {

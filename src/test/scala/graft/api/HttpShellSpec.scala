@@ -191,6 +191,23 @@ class HttpShellSpec extends AnyFunSuite {
     } finally HttpShell.stop(server)
   }
 
+  test("two correlations without an id are a 422 naming the shared id, not one merged series") {
+    val server = HttpShell.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      val noId = """{"type": "prophet", "fromData": "m", "fromIndex": "v",
+                   | "toData": "m", "toIndex": "v", "unitsToForecast": 3}""".stripMargin
+      val body = request.substring(0, request.indexOf("\"analyticsOptions\"")) +
+        s""""analyticsOptions": {"correlations": [$noId, $noId]}}"""
+      for (route <- Seq("/analyze", "/saturating-growth/single")) {
+        val r = post(port, route, body)
+        assert(r.statusCode() == 422, s"$route: ${r.body().take(200)}")
+        val detail = new ObjectMapper().readTree(r.body()).get("detail").asText
+        assert(detail.contains("duplicate correlation id: c0"), detail)
+      }
+    } finally HttpShell.stop(server)
+  }
+
   test("stop shuts down the executor pool (no idle-pool accumulation)") {
     val server = HttpShell.start(spark, 0)
     HttpShell.stop(server)

@@ -22,6 +22,10 @@ import scala.jdk.CollectionConverters._
   * slack only; any modeling drift (a changed basis, prior, or scaling)
   * fails by orders of magnitude.
   *
+  * The same check runs on two seeded in-repo requests of those shapes
+  * (`tools/request_gen.py`, goldens from `tools/golden_gen.py --fixtures`),
+  * so it also runs where the reference fixtures are absent.
+  *
   * Since round 4 the goldens also pin the INTERVAL columns
   * (yhat_lower/upper, trend_lower/upper): the closed-form
   * trend-continuation scheme is deterministic, so the numpy mirror
@@ -124,6 +128,22 @@ class GoldenParitySpec extends AnyFunSuite {
                math.max(1.0, math.abs(gc.get("coef_center").asDouble)),
              s"$id coef center: $center vs ${gc.get("coef_center").asDouble}")
     }
+  }
+
+  private def request(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/requests/$name.json")
+    require(in != null, s"request resource $name missing — run tools/request_gen.py")
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  test("in-repo nested daily request, 4 correlations, one horizon defaulted: " +
+       "forecasts match the independent golden fitter") {
+    assertParity(request("daily_nested"), "daily_nested")
+  }
+
+  test("in-repo flat hourly request, grain defaults to D: forecasts match " +
+       "the independent golden fitter") {
+    assertParity(request("hourly_flat"), "hourly_flat")
   }
 
   test("example-timestamp fixture: target+covariate forecasts match the " +

@@ -47,8 +47,11 @@ class StreamRateSpikeSpec extends AnyFunSuite {
 
   test("two batches: the second day's update sees the first batch's baseline") {
     val base = java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime
+    // one file per append, committed by one rename: a micro-batch sees
+    // all of an append or none of it (with one file per partition, a
+    // batch could start between two file commits and see part of a day)
     def write(dir: String, rows: Seq[(String, java.sql.Timestamp)]) =
-      rows.toDF("event_type", "ts").write.mode("append").parquet(dir)
+      rows.toDF("event_type", "ts").coalesce(1).write.mode("append").parquet(dir)
     val dir = Files.createTempDirectory("graft-stream-spike2").toString
     write(dir, (0 until 5).flatMap(d => (1 to 10).map(i => ("err",
       new java.sql.Timestamp(base + d * 86400000L + i * 1000L)))))

@@ -30,11 +30,14 @@ Prophet itself cannot run in this container (no scipy/cmdstan), and the
 reference ships no stored forecasts, so cross-implementation agreement on
 the reference's own fixtures is the strongest available anchor.
 
-Run:  python3 tools/golden_gen.py
+Run:  python3 tools/golden_gen.py              (the two reference fixtures)
+      python3 tools/golden_gen.py --fixtures   (the in-repo requests of
+          tools/request_gen.py: golden/daily_nested.json, hourly_flat.json)
 """
 import json
 import math
 import os
+import sys
 from datetime import datetime, timezone
 
 import numpy as np
@@ -281,10 +284,23 @@ def run_analyze(documents, correlations):
     return out
 
 
+def fixtures(here, golden_dir):
+    """Goldens for the in-repo requests tools/request_gen.py writes."""
+    req_dir = os.path.join(here, "..", "src", "test", "resources", "requests")
+    for name in ("daily_nested", "hourly_flat"):
+        body = json.load(open(os.path.join(req_dir, name + ".json")))
+        golden = run_analyze(body["documents"], body["analyticsOptions"]["correlations"])
+        json.dump(golden, open(os.path.join(golden_dir, name + ".json"), "w"))
+        print(f"{name}:", {k: len(v["target"]) for k, v in golden.items()})
+
+
 def main():
     here = os.path.dirname(os.path.abspath(__file__))
     golden_dir = os.path.join(here, "..", "src", "test", "resources", "golden")
     os.makedirs(golden_dir, exist_ok=True)
+    if sys.argv[1:] == ["--fixtures"]:
+        fixtures(here, golden_dir)
+        return
 
     ex = json.load(open("/root/reference/example-timestamp.json"))
     golden = run_analyze(ex["documents"], ex["analyticsOptions"]["correlations"])
