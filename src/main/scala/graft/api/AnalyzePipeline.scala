@@ -1,59 +1,125 @@
 package graft.api
 
 import graft.forecast.Forecaster
+import graft.forecast.Forecaster.ForecastRow
 import graft.forecast.StructuralTS.FitSpec
-import graft.queries.cacheOnce
-import graft.stats.Diagnostics
+import graft.stats.{Diagnostics, Granger}
 import graft.ts.{Aggregations, TimeOps}
-import org.apache.spark.sql.DataFrame
+import java.sql.Timestamp
+import java.time.ZoneId
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, TimestampType}
 
 /** The `/analyze` dataflow (SURVEY §3.1) rebuilt Spark-first.
   *
   * The reference loops over correlations serially, fitting one Prophet at
   * a time (`app.py:102-250`, and due to the §2.9 bug only the FIRST ever
-  * runs). Here every correlation becomes two tagged series (covariate,
-  * target) in two unioned frames; each stage — grain aggregation,
-  * covariate forecast, observed-splice, target alignment, target
-  * forecast-with-regressor, ACF/PACF — runs ONCE over all series,
-  * partitioned by the correlation id. Adding correlations adds rows, not
-  * stages: the plan shape is constant and the cluster scales it.
+  * runs). Here a request is one keyed pass: every correlation's two sides
+  * (covariate "from", target "to") are extracted and bucketed, one
+  * grouped aggregate per distinct aggregation turns them into
+  * `(series, side, ds, y)` histories, and one `groupByKey(series)` runs
+  * [[kernel]] on each correlation's two sorted arrays. The kernel does
+  * every per-correlation step and emits one tagged [[PassRow]] per output
+  * record. Adding correlations adds rows, not stages: the plan shape is
+  * constant and the cluster scales it.
   *
   * Stage map (reference op → here):
   *   P1 extract          → [[extractSeries]] (dotted path on nested struct)
-  *   T1/T2/T3 + A1 + A5  → `Aggregations.groupByTime` + driver-side counts
-  *   C3 + C6             → `Forecaster.forecast/futureGrid` on covariates
-  *   J1 + J2             → observed-splice left join + coalesce
-  *   J3 / J4             → covariate alignment joins (broadcast)
-  *   C4 + C8             → `Forecaster.forecast` with regressor on targets
-  *   C1 + C2             → `Diagnostics.acfPacf` on both sides
-  *   C7                  → `Forecaster.regressorCoefficients`
+  *   T1/T2/T3 + A1       → `TimeOps.bucket` per side + `Aggregations.groupByTime`
+  *   A5                  → kernel: horizons from the side lengths
+  *   A3/A4               → kernel: cap stats and floor/cap [[resolve]]
+  *   C6 + C3             → kernel: `Forecaster.futureGrid` + `Forecaster.forecast`
+  *                         on the covariate
+  *   J1 + J2             → kernel: observed covariate wins, forecast fills
+  *   J3 / J4             → kernel: covariate aligned onto the target's
+  *                         history (0 when absent) and future (dropped when absent)
+  *   C4 + C8             → kernel: `Forecaster.forecast` with regressor on the target
+  *   C7                  → kernel: `Forecaster.regressorCoefficients` of that model
+  *   C1 + C2             → kernel: `Diagnostics.acfPacf` on both sides
+  *   A2                  → kernel: date bounds and length per side
+  *   C9 / C12            → kernel: `Granger.causality` / [[moments]], by type
   *   F1/F2               → `segment` column ("historical"/"future")
   */
 object AnalyzePipeline {
 
-  case class AnalyzeResult(
-      covariateForecasts: DataFrame, // (series, ds, segment, spliced 13-col frame)
-      targetForecasts: DataFrame,    // (series, ds, segment, 13-col frame)
-      diagnostics: DataFrame,        // (series, side, lag, acf, pacf)
-      regressorCoefficients: DataFrame, // (series, regressor_mode, center, coef bounds)
-      bounds: DataFrame,             // (series, side, min_ds, max_ds, n)
-      fitBounds: Map[String, (Double, Double)] = Map.empty, // id -> resolved (floor, cap)
-      horizons: Map[String, (Int, Int)] = Map.empty, // id -> honored (from, to) horizons
-      granger: Option[DataFrame] = None, // C9 per-lag F-tests for type=granger correlations
-      univariate: Option[DataFrame] = None, // C12 per-side moments for type=univariateStatistics
-      cachedFrames: Seq[DataFrame] = Nil) { // request-scoped caches, released by close()
+  /** The pass's output. [[pass]] is a plan that has not run; the frames
+    * library callers read are projections of it with their own schemas,
+    * built on first use. Nothing is cached. */
+  final class AnalyzeResult private[AnalyzePipeline] (
+      val pass: Dataset[PassRow], correlations: Seq[CorrelationSpec], single: Boolean) {
 
-    /** Release the request-scoped caches (per-request histories/splice).
-      * Each `analyze` call caches frames built from THAT request's data —
-      * distinct canonicalized plans per request — so a long-lived session
-      * serving many requests would otherwise accumulate CacheManager
-      * entries unboundedly. Call after the result frames are consumed;
-      * the result frames stay valid afterwards (they recompute from
-      * source if re-evaluated). Idempotent. */
-    def close(): Unit = cachedFrames.foreach(_.unpersist())
+    private def rows(field: String): DataFrame = pass.toDF().filter(col(field).isNotNull)
+
+    /** (series, ds, segment, 13-col frame, x): the covariate forecast,
+      * x the observed covariate where there is one, else the forecast. */
+    lazy val covariateForecasts: DataFrame =
+      rows("forecast").filter(col("side") === "from").select(col("forecast.*"), col("x"))
+    /** (series, ds, segment, 13-col frame) */
+    lazy val targetForecasts: DataFrame =
+      rows("forecast").filter(col("side") === "to").select("forecast.*")
+    /** (series, lag, acf, pacf, side) */
+    lazy val diagnostics: DataFrame =
+      rows("diagnostic").select(col("series"), col("diagnostic.*"), col("side"))
+    /** (series, regressor_mode, center, coef bounds) */
+    lazy val regressorCoefficients: DataFrame =
+      rows("coefficient").select(col("series"), col("coefficient.*"))
+    /** (series, side, min_ds, max_ds, n) */
+    lazy val bounds: DataFrame = rows("bounds").select(col("series"), col("side"), col("bounds.*"))
+    /** C9 per-lag F-tests for type=granger correlations. */
+    lazy val granger: Option[DataFrame] =
+      if (single || !correlations.exists(_.corrType == "granger")) None
+      else Some(rows("granger").select(col("series"), col("granger.*"))
+        .toDF("series" +: Granger.columns: _*))
+    /** C12 per-side moments for type=univariateStatistics correlations. */
+    lazy val univariate: Option[DataFrame] =
+      if (single || !correlations.exists(_.corrType == "univariateStatistics")) None
+      else Some(rows("univariate").select(col("series"), col("side"), col("univariate.*")))
+
+    private lazy val fits: Map[String, Fit] =
+      pass.filter(col("fit").isNotNull).collect().map(r => r.series -> r.fit).toMap
+    /** id -> resolved target (floor, cap), for correlations with data. */
+    lazy val fitBounds: Map[String, (Double, Double)] =
+      fits.map { case (id, f) => id -> (f.floor, f.cap) }
+    /** id -> honored (from, to) horizons, for correlations with data. */
+    lazy val horizons: Map[String, (Int, Int)] =
+      fits.map { case (id, f) => id -> (f.from_horizon, f.to_horizon) }
+
+    /** Nothing to release: the result holds no cache. Idempotent. */
+    def close(): Unit = ()
   }
+
+  /** A C1/C2 lag. */
+  case class Diagnostic(lag: Int, acf: Double, pacf: Double)
+  /** C7 for one regressor. */
+  case class Coefficient(regressor_mode: String, center: Double, coef_lower: Double,
+                         coef: Double, coef_upper: Double)
+  /** A2 for one side. */
+  case class Bounds(min_ds: Timestamp, max_ds: Timestamp, n: Long)
+  /** C12 for one side: Spark's `stddev_samp`, `skewness` and `kurtosis`,
+    * None where those are null. */
+  case class Moments(n: Long, mean: Double, std: Option[Double], min: Double, max: Double,
+                     skewness: Option[Double], kurtosis: Option[Double])
+  /** A3/A4 and A5 for one correlation: the target's resolved floor/cap and
+    * the honored horizons. */
+  case class Fit(floor: Double, cap: Double, from_horizon: Int, to_horizon: Int)
+
+  /** One record of the pass: its correlation, its side ("from" or "to")
+    * where it has one, and exactly one of the remaining fields, which
+    * names the result it belongs to. `x` rides along with a covariate
+    * `forecast`. */
+  case class PassRow(series: String, side: String = null,
+                     forecast: ForecastRow = null, x: Option[Double] = None,
+                     diagnostic: Diagnostic = null, coefficient: Coefficient = null,
+                     bounds: Bounds = null, granger: Granger.LagResult = null,
+                     univariate: Moments = null, fit: Fit = null)
+
+  // derived once: deriving a product encoder reflects over the type,
+  // which would otherwise cost every request
+  private val historyEncoder = Encoders.product[(String, String, Long, Double)]
+  private val passEncoder = Encoders.product[PassRow]
 
   private val PathPattern = "^[A-Za-z0-9_]+(\\.[A-Za-z0-9_]+)*$".r
 
@@ -78,82 +144,6 @@ object AnalyzePipeline {
       .filter(col("ds").isNotNull && col("y").isNotNull)
   }
 
-  /** One `(series, ds, y)` history per correlation, unioned: the
-    * `side` (document, path) of each, at its grain and aggregation. */
-  private def histories(documents: Map[String, DataFrame], correlations: Seq[CorrelationSpec],
-                        side: CorrelationSpec => (String, String)): DataFrame =
-    correlations.map { c =>
-      val (docName, path) = side(c)
-      val doc = documents.getOrElse(docName,
-        throw new IllegalArgumentException(s"unknown document: $docName"))
-      Aggregations.groupByTime(
-          extractSeries(doc, c.dateColumn, path), c.grain.map(TimeOps.normalizeGrain),
-          c.aggregation)
-        .select(lit(c.id).as("series"), col("ds"), col("y"))
-    }.reduce(_ unionByName _)
-
-  /** A5: the horizon defaults to the side's post-aggregation length
-    * (`prepare_dataset` is called per side, `app.py:115-120/158-163`, so
-    * the covariate grid runs len(cov) periods and the target grid
-    * len(target) periods). The per-series counts are a handful of
-    * scalars, and the job is skipped when every correlation specifies
-    * unitsToForecast (the common case). */
-  private def horizons(correlations: Seq[CorrelationSpec], hist: DataFrame): Map[String, Int] = {
-    val counts =
-      if (correlations.forall(_.unitsToForecast.isDefined)) Map.empty[String, Int]
-      else hist.groupBy("series").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1).toInt).toMap
-    correlations.map(c => c.id -> c.unitsToForecast.getOrElse(counts.getOrElse(c.id, 1))).toMap
-  }
-
-  /** Per-series (max, stddev, min) for resolving logistic bounds (A3/A4):
-    * the reference computes floor/ceiling only for logistic growth
-    * (`app.py:354-364`), each side from ITS OWN series (the bundle's self
-    * floor/ceiling, app.py:503-538); without logistic growth the job is
-    * skipped (cap/floor are unused by the linear trend). */
-  private def capStatsOf(hist: DataFrame, anyLogistic: Boolean): Map[String, (Double, Double, Double)] =
-    if (!anyLogistic) Map.empty
-    else hist.groupBy("series")
-      .agg(max("y").as("mx"), stddev_samp("y").as("sd"), min("y").as("mn"))
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-
-  /** `fitSpec(floor, cap)`: the user's floor unless the series goes lower;
-    * the user's ceiling, else max + 3 sd, unless the series goes higher. */
-  private def resolve(stats: Map[String, (Double, Double, Double)], id: String,
-                      userFloor: Double, userCeiling: Option[Double])
-                     (fitSpec: (Double, Double) => FitSpec): FitSpec = {
-    val (mx, sd, mn) = stats.getOrElse(id, (1.0, 0.0, 0.0))
-    fitSpec(math.min(userFloor, mn),
-            math.max(userCeiling.getOrElse(mx + 3 * (if (sd.isNaN) 0.0 else sd)), mx))
-  }
-
-  /** Each correlation's target fit spec, with its bounds resolved. */
-  private def targetSpecs(correlations: Seq[CorrelationSpec],
-                          stats: Map[String, (Double, Double, Double)]): Map[String, FitSpec] =
-    correlations.map(c => c.id -> resolve(stats, c.id, c.floor, c.ceiling)(c.fitSpec)).toMap
-
-  /** The future grid of every series; grains can differ per
-    * correlation, so one grid per distinct grain. */
-  private def gridFor(correlations: Seq[CorrelationSpec], hist: DataFrame,
-                      horizons: Map[String, Int]): DataFrame = {
-    val grainOf = correlations
-      .map(c => c.id -> c.grain.map(TimeOps.normalizeGrain).getOrElse("D")).toMap
-    grainOf.values.toSeq.distinct.map { g =>
-      val ids = grainOf.collect { case (id, gg) if gg == g => id }.toSeq
-      Forecaster.futureGrid(hist.filter(col("series").isin(ids: _*)), g,
-                            horizon = 1, horizonOverrides = horizons)
-    }.reduce(_ unionByName _)
-  }
-
-  /** The histories tagged with their `side` ("from" or "to"), unioned. */
-  private def bySide(hists: Seq[(String, DataFrame)]): DataFrame =
-    hists.map { case (side, hist) => hist.withColumn("side", lit(side)) }.reduce(_ unionByName _)
-
-  /** A2: date bounds and length per series and side. */
-  private def boundsOf(hists: Seq[(String, DataFrame)]): DataFrame =
-    bySide(hists).groupBy("series", "side")
-      .agg(min("ds").as("min_ds"), max("ds").as("max_ds"), count(lit(1)).as("n"))
-
   /** Both entry points take correlations whose ids name their series:
     * two correlations with one id (a missing id defaults to "c0") would
     * be unioned into one series, fitted as one model and returned as
@@ -166,97 +156,8 @@ object AnalyzePipeline {
   }
 
   def analyze(documents: Map[String, DataFrame],
-              correlations: Seq[CorrelationSpec]): AnalyzeResult = {
-    requireValid(correlations)
-    val covHist = cacheOnce(histories(documents, correlations, c => (c.fromData, c.fromIndex)))
-    val tgtHist = cacheOnce(histories(documents, correlations, c => (c.toData, c.toIndex)))
-    val covHorizons = horizons(correlations, covHist)
-    val tgtHorizons = horizons(correlations, tgtHist)
-
-    val capStats = capStatsOf(tgtHist, correlations.exists(_.growth == "logistic"))
-    val covCapStats = capStatsOf(covHist,
-      correlations.exists(_.covOptions.exists(_.growth == "logistic")))
-    val specOverrides = targetSpecs(correlations, capStats)
-    // §3.2 covariate-side options (ForecastingOptions.fromIndex) when
-    // present; otherwise the covariate fits with the correlation's spec
-    // (the /analyze behavior: one changepoint prior for both fits)
-    val covSpecOverrides = correlations.map(c => c.id -> c.covOptions
-      .map(o => resolve(covCapStats, c.id, o.floor, o.ceiling)(o.fitSpec))
-      .getOrElse(specOverrides(c.id))).toMap
-    val defaultSpec = specOverrides(correlations.head.id)
-    val defaultCovSpec = covSpecOverrides(correlations.head.id)
-
-    // C3: covariate forecasts over history + future (covariate-side spec)
-    val covForecast = Forecaster.forecast(covHist, gridFor(correlations, covHist, covHorizons),
-                                          defaultCovSpec, "series", covSpecOverrides)
-
-    // J1+J2: observed covariate wins, forecast fills the future
-    val covSpliced = cacheOnce(covForecast
-      .join(covHist.select(col("series"), col("ds"), col("y")), Seq("series", "ds"), "left")
-      .withColumn("x", coalesce(col("y"), col("yhat")))
-      .drop("y"))
-
-    // J3 (history) / J4-as-inner (future): align covariate onto target
-    val covX = covSpliced.select(col("series"), col("ds"), col("x"))
-    val tgtHistX = tgtHist.join(covX, Seq("series", "ds"), "left")
-      .withColumn("x", coalesce(col("x"), lit(0.0)))
-    // J4-as-inner also reproduces the reference's dropna: target-future
-    // dates beyond the covariate's forecast coverage are dropped
-    val tgtFuture = gridFor(correlations, tgtHist, tgtHorizons)
-      .join(covX, Seq("series", "ds"), "inner")
-
-    // C4/C8: target forecast with the covariate as regressor
-    val tgtForecast = Forecaster.forecast(tgtHistX, tgtFuture,
-                                          defaultSpec, "series", specOverrides)
-
-    // C1/C2 diagnostics on both sides
-    val diag = Diagnostics.acfPacf(covHist, "series").withColumn("side", lit("from"))
-      .unionByName(Diagnostics.acfPacf(tgtHist, "series").withColumn("side", lit("to")))
-
-    // C7 regressor coefficients
-    val coefs = Forecaster.regressorCoefficients(tgtHistX, defaultSpec, "series", specOverrides)
-
-    // C9 for type="granger" correlations: the notebook prototype
-    // (`Untitled.ipynb` cell 12) runs
-    // `granger_causality_tests(remove_trend(from), remove_trend(to),
-    // maxlag=14)` — from is the CAUSE, to the EFFECT. tgtHistX already
-    // holds exactly that aligned pair (y = target, x = spliced
-    // covariate), so the tests reuse the pipeline's joins: one extra
-    // keyed flatMapGroups over only the granger-typed series, no new
-    // wide shuffle. Lags that run out of degrees of freedom are dropped
-    // inside the test (short series yield fewer than 14 rows).
-    val grangerIds = correlations.filter(_.corrType == "granger").map(_.id)
-    val granger: Option[DataFrame] =
-      if (grangerIds.isEmpty) None
-      else Some(graft.stats.Granger.causality(
-        tgtHistX.filter(col("series").isin(grangerIds: _*)),
-        maxlag = 14, detrend = true))
-
-    // C12 for type="univariateStatistics" correlations (the Literal's
-    // last member, also declared-but-unshipped in the reference): the
-    // q19 moment bundle per side over the aggregated series — one
-    // grouped agg over already-built frames. Spark's skewness/kurtosis
-    // are the population / excess-population estimators (pandas
-    // describe-family defaults).
-    val uniIds = correlations.filter(_.corrType == "univariateStatistics").map(_.id)
-    val univariate: Option[DataFrame] =
-      if (uniIds.isEmpty) None
-      else Some(bySide(Seq("from" -> covHist, "to" -> tgtHist))
-        .filter(col("series").isin(uniIds: _*))
-        .groupBy("series", "side")
-        .agg(count(lit(1)).as("n"), avg("y").as("mean"),
-             stddev_samp("y").as("std"), min("y").as("min"), max("y").as("max"),
-             skewness(col("y")).as("skewness"), kurtosis(col("y")).as("kurtosis")))
-
-    val bounds = boundsOf(Seq("from" -> covHist, "to" -> tgtHist))
-
-    AnalyzeResult(covSpliced, tgtForecast, diag, coefs, bounds,
-                  specOverrides.map { case (id, s) => id -> (s.floor, s.cap) },
-                  correlations.map(c =>
-                    c.id -> (covHorizons(c.id), tgtHorizons(c.id))).toMap,
-                  granger = granger, univariate = univariate,
-                  cachedFrames = Seq(covHist, tgtHist, covSpliced))
-  }
+              correlations: Seq[CorrelationSpec]): AnalyzeResult =
+    build(documents, correlations, single = false)
 
   /** §3.3 `/saturating-growth/single` (`app.py:562-609`): fit the
     * TARGET series alone — no covariate extraction, no splice or
@@ -265,20 +166,176 @@ object AnalyzePipeline {
     * Logistic floor/cap resolve from the series itself (A3/A4), same
     * as the bundle's cached `floor`/`ceiling` properties. */
   def analyzeSingle(documents: Map[String, DataFrame],
-                    correlations: Seq[CorrelationSpec]): AnalyzeResult = {
-    requireValid(correlations)
-    val hist = cacheOnce(histories(documents, correlations, c => (c.toData, c.toIndex)))
-    val horizon = horizons(correlations, hist)
-    val specOverrides = targetSpecs(correlations,
-      capStatsOf(hist, correlations.exists(_.growth == "logistic")))
-    val forecast = Forecaster.forecast(hist, gridFor(correlations, hist, horizon),
-      specOverrides(correlations.head.id), "series", specOverrides)
-    val diag = Diagnostics.acfPacf(hist, "series").withColumn("side", lit("to"))
+                    correlations: Seq[CorrelationSpec]): AnalyzeResult =
+    build(documents, correlations, single = true)
 
-    AnalyzeResult(forecast.limit(0), forecast, diag,
-                  forecast.sparkSession.emptyDataFrame, boundsOf(Seq("to" -> hist)),
-                  specOverrides.map { case (id, s) => id -> (s.floor, s.cap) },
-                  horizon.map { case (id, h) => id -> (h, h) },
-                  cachedFrames = Seq(hist))
+  /** The pass, built and not run: per side a bucketed branch, per
+    * distinct aggregation one grouped aggregate over its branches, then
+    * [[kernel]] per correlation. */
+  private def build(documents: Map[String, DataFrame], correlations: Seq[CorrelationSpec],
+                    single: Boolean): AnalyzeResult = {
+    requireValid(correlations)
+    val branches = for {
+      c <- correlations
+      (side, docName, path) <- Seq(("from", c.fromData, c.fromIndex), ("to", c.toData, c.toIndex))
+      if !single || side == "to"
+    } yield {
+      val doc = documents.getOrElse(docName,
+        throw new IllegalArgumentException(s"unknown document: $docName"))
+      Aggregations.normalizeAgg(c.aggregation) -> extractSeries(doc, c.dateColumn, path)
+        .select(lit(c.id).as("series"), lit(side).as("side"),
+                TimeOps.bucket(col("ds"), c.grain.map(TimeOps.normalizeGrain)).as("ds"), col("y"))
+    }
+    val histories = branches.map(_._1).distinct.map { agg =>
+      Aggregations.groupByTime(branches.collect { case (a, b) if a == agg => b }
+        .reduce(_ unionByName _), None, agg, Seq("series", "side"))
+    }.reduce(_ unionByName _)
+
+    val specOf = correlations.map(c => c.id -> c).toMap
+    // as today, the series' own cap stats count only when some
+    // correlation of the request fits that side logistic
+    val tgtStats = correlations.exists(_.growth == "logistic")
+    val covStats = correlations.exists(_.covOptions.exists(_.growth == "logistic"))
+    val zone = DateTimeUtils.getZoneId(
+      histories.sparkSession.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    val pass = histories.select(col("series"), col("side"), unix_micros(col("ds")), col("y"))
+      .as(historyEncoder)
+      .groupByKey((r: (String, String, Long, Double)) => r._1)(Encoders.STRING)
+      .flatMapGroups { (id, it) =>
+        kernel(specOf(id), it.toArray, single, tgtStats, covStats, zone)
+      }(passEncoder)
+    new AnalyzeResult(pass, correlations, single)
+  }
+
+  /** Epoch microseconds as the model's epoch seconds, the way
+    * `cast("double")` turns a timestamp into seconds. */
+  private def secs(t: Array[Long]): Array[Double] = t.map(_ / 1e6)
+
+  /** One side's history in time order: instants (epoch microseconds) and values. */
+  private final case class Side(t: Array[Long], y: Array[Double]) {
+    def n: Int = t.length
+  }
+
+  /** Every per-correlation step of the pass, on one correlation's
+    * `(series, side, ds, y)` rows. */
+  private def kernel(c: CorrelationSpec, rows: Array[(String, String, Long, Double)],
+                     single: Boolean, tgtStats: Boolean, covStats: Boolean,
+                     zone: ZoneId): Iterator[PassRow] = {
+    def side(name: String): Side = {
+      val r = rows.filter(_._2 == name).sortBy(_._3)
+      Side(r.map(_._3), r.map(_._4))
+    }
+    val (cov, tgt) = (side("from"), side("to"))
+    val id = c.id
+    val grain = c.grain.map(TimeOps.normalizeGrain).getOrElse("D")
+    def grid(s: Side, horizon: Int): Array[Long] =
+      if (s.n == 0) Array.empty else Forecaster.futureGrid(s.t.last, grain, horizon, zone)
+    val out = Iterator.newBuilder[PassRow]
+
+    // A5: an unset horizon is the side's own length
+    def horizon(s: Side): Int = c.unitsToForecast.getOrElse(math.max(s.n, 1))
+    val (covH, tgtH) = (horizon(cov), horizon(tgt))
+    // A3/A4: the target's bounds; §3.2 covariate-side options when
+    // present, otherwise the covariate fits with the target's spec
+    val tgtSpec = resolve(if (tgtStats) capStats(tgt.y) else None, c.floor, c.ceiling)(c.fitSpec)
+    val covSpec = c.covOptions.map(o =>
+      resolve(if (covStats) capStats(cov.y) else None, o.floor, o.ceiling)(o.fitSpec))
+      .getOrElse(tgtSpec)
+
+    // C6 + C3, then J1 + J2: the observed covariate wins, the forecast
+    // fills the future
+    val covAll = cov.t ++ grid(cov, covH)
+    val covFit =
+      if (single) None
+      else Forecaster.forecast(id, secs(cov.t), cov.y, None, secs(covAll), None, covSpec)
+    val covX: Map[Long, Double] = covFit.fold(Map.empty[Long, Double]) { case (_, fc) =>
+      val x = Array.tabulate(covAll.length)(i => if (i < cov.n) cov.y(i) else fc(i).yhat)
+      fc.indices.foreach(i => out += PassRow(id, "from", forecast = fc(i), x = Some(x(i))))
+      covAll.zip(x).toMap
+    }
+
+    // J3: the target's history takes the covariate at its dates, else 0;
+    // J4: target future dates beyond the covariate's coverage are dropped
+    // (the reference's dropna). C4 + C8 fit the target with the
+    // covariate as regressor, and C7 reads that model.
+    val tgtX = tgt.t.map(covX.getOrElse(_, 0.0))
+    val tgtFuture = if (single) grid(tgt, tgtH) else grid(tgt, tgtH).filter(covX.contains)
+    val tgtAll = tgt.t ++ tgtFuture
+    Forecaster.forecast(id, secs(tgt.t), tgt.y, Option.when(!single)(tgtX), secs(tgtAll),
+                        Option.when(!single)(tgtX ++ tgtFuture.map(covX)), tgtSpec)
+      .foreach { case (model, fc) =>
+        fc.foreach(r => out += PassRow(id, "to", forecast = r))
+        if (!single) Forecaster.regressorCoefficients(model).foreach { case (m, ctr, lo, cf, hi) =>
+          out += PassRow(id, coefficient = Coefficient(m, ctr, lo, cf, hi))
+        }
+      }
+
+    // C1/C2 and A2 per side with data
+    for ((name, s) <- Seq("from" -> cov, "to" -> tgt) if s.n > 0) {
+      Diagnostics.acfPacf(s.y, None).foreach { case (lag, a, p) =>
+        out += PassRow(id, name, diagnostic = Diagnostic(lag, a, p))
+      }
+      out += PassRow(id, name, bounds = Bounds(DateTimeUtils.toJavaTimestamp(s.t.head),
+                                               DateTimeUtils.toJavaTimestamp(s.t.last), s.n))
+    }
+
+    // C9 for type="granger": the notebook prototype (`Untitled.ipynb`
+    // cell 12) runs `granger_causality_tests(remove_trend(from),
+    // remove_trend(to), maxlag=14)`, from the CAUSE and to the EFFECT,
+    // here on the aligned pair (target, spliced covariate). Lags that run
+    // out of degrees of freedom are dropped inside the test.
+    if (!single && c.corrType == "granger" && tgt.n > 0)
+      Granger.causality(secs(tgt.t), tgt.y, tgtX, maxlag = 14, detrend = true)
+        .foreach(r => out += PassRow(id, granger = r))
+    // C12 for type="univariateStatistics" (the Literal's last member,
+    // declared but unshipped in the reference): the q19 moment bundle
+    // per side over the aggregated series
+    if (!single && c.corrType == "univariateStatistics")
+      for ((name, s) <- Seq("from" -> cov, "to" -> tgt) if s.n > 0)
+        out += PassRow(id, name, univariate = moments(s.y))
+
+    out += PassRow(id, fit = Fit(tgtSpec.floor, tgtSpec.cap,
+                                 if (single) tgtH else covH, tgtH))
+    out.result()
+  }
+
+  /** A side's (max, sample stddev, min) for resolving logistic bounds
+    * (A3/A4); None for an empty side. The stddev is `stddev_samp`'s
+    * (pandas `.std()`, ddof=1), 0 for a single point. */
+  private def capStats(y: Array[Double]): Option[(Double, Double, Double)] =
+    if (y.isEmpty) None
+    else {
+      val mean = y.sum / y.length
+      val sd = if (y.length < 2) 0.0
+               else math.sqrt(y.map(v => (v - mean) * (v - mean)).sum / (y.length - 1))
+      Some((y.max, sd, y.min))
+    }
+
+  /** `fitSpec(floor, cap)`: the user's floor unless the series goes lower;
+    * the user's ceiling, else max + 3 sd, unless the series goes higher.
+    * Without stats (linear growth, or no data) max 1 and sd, min 0. */
+  private def resolve(stats: Option[(Double, Double, Double)], userFloor: Double,
+                      userCeiling: Option[Double])
+                     (fitSpec: (Double, Double) => FitSpec): FitSpec = {
+    val (mx, sd, mn) = stats.getOrElse((1.0, 0.0, 0.0))
+    fitSpec(math.min(userFloor, mn),
+            math.max(userCeiling.getOrElse(mx + 3 * (if (sd.isNaN) 0.0 else sd)), mx))
+  }
+
+  /** C12: count, mean, sample stddev, min, max, and the population
+    * skewness and excess kurtosis (pandas describe-family defaults), with
+    * Spark's nulls: stddev for one point, the higher moments for a
+    * constant series. */
+  private def moments(y: Array[Double]): Moments = {
+    val n = y.length.toDouble
+    val mean = y.sum / n
+    var (m2, m3, m4) = (0.0, 0.0, 0.0)
+    for (v <- y) {
+      val d = v - mean
+      m2 += d * d; m3 += d * d * d; m4 += d * d * d * d
+    }
+    Moments(y.length, mean, Option.when(n > 1)(math.sqrt(m2 / (n - 1))), y.min, y.max,
+            Option.when(m2 != 0)(math.sqrt(n) * m3 / math.sqrt(m2 * m2 * m2)),
+            Option.when(m2 != 0)(n * m4 / (m2 * m2) - 3.0))
   }
 }

@@ -22,9 +22,10 @@ import org.apache.spark.sql.SparkSession
   * `curl -s localhost:8080/health` and
   * `curl -s -XPOST localhost:8080/analyze -d @src/test/resources/requests/daily_nested.json`.
   *
-  * Request-scoped caches are released via `AnalyzeResult.close()` after
-  * each response is serialized, so a long-running shell does not
-  * accumulate CacheManager entries (CacheLifecycleSpec pins this).
+  * A request is one keyed Spark pass ([[AnalyzePipeline]]) that the
+  * response collects once; it caches nothing, so a long-running shell
+  * leaves the CacheManager and the persistent RDDs as it found them
+  * (CacheLifecycleSpec pins this).
   *
   * Every handler runs with the service's session active ([[inSession]]).
   * The pool's threads have none of their own, and on such a thread
@@ -59,14 +60,11 @@ object HttpShell {
                   case "single" => AnalyzePipeline.analyzeSingle(parsed.documents, parsed.correlations)
                   case _        => AnalyzePipeline.analyze(parsed.documents, parsed.correlations)
                 }
-                try {
-                  val json = which match {
-                    case "analyze" => ResponseAssembly.toJson(result, parsed.correlations)
-                    case _ => ResponseAssembly.toJsonSaturating(result,
-                      parsed.correlations.map(c => c.id -> c.growth).toMap)
-                  }
-                  (200, json)
-                } finally result.close()
+                (200, which match {
+                  case "analyze" => ResponseAssembly.toJson(result, parsed.correlations)
+                  case _ => ResponseAssembly.toJsonSaturating(result,
+                    parsed.correlations.map(c => c.id -> c.growth).toMap)
+                })
             }
           } catch {
             // FastAPI status split: request-shaped failures are
@@ -96,8 +94,7 @@ object HttpShell {
     // request — the reference runs 3 uvicorn replicas behind a load
     // balancer (docker-compose.yaml), i.e. concurrent service is part of
     // the S1 contract. Spark sessions are thread-safe for concurrent
-    // actions, so a small fixed pool is all the shell needs; each
-    // request still releases its own caches via close() in the handler.
+    // actions, so a small fixed pool is all the shell needs.
     // Daemon threads as a backstop only: HttpServer.stop() does not shut
     // down a caller-provided executor, so [[stop]] below shuts the pool
     // down explicitly — repeated start/stop cycles must not accumulate

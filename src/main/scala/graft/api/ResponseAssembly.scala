@@ -2,16 +2,16 @@ package graft.api
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
 import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
-import graft.api.AnalyzePipeline.AnalyzeResult
+import graft.api.AnalyzePipeline.{AnalyzeResult, Diagnostic, PassRow}
+import graft.forecast.Forecaster.ForecastRow
 import java.io.StringWriter
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 
 /** R1/R2: assemble the reference's nested response JSON
   * (`app.py:100-248`, contract `responses.py:50-58`) from the pipeline's
-  * DataFrames. Collection happens here and only here — the frames are
-  * per-correlation aggregates (bounded by horizon × correlations, not by
-  * input size), mirroring the reference's response-sized payloads.
+  * pass. Collection happens here and only here, once per response: the
+  * pass's records are per-correlation results (bounded by horizon ×
+  * correlations, not by input size), mirroring the reference's
+  * response-sized payloads, and are grouped on the driver.
   * Divergence from §2.9: ALL correlations are returned, not just the
   * first.
   *
@@ -48,8 +48,8 @@ object ResponseAssembly {
   }
 
   /** An array field with one object per row, its fields written by `fields`. */
-  private def objects(g: JsonGenerator, name: String, rows: Array[Row])
-                     (fields: Row => Unit): Unit = {
+  private def objects[T](g: JsonGenerator, name: String, rows: Array[T])
+                        (fields: T => Unit): Unit = {
     g.writeArrayFieldStart(name)
     rows.foreach { r => g.writeStartObject(); fields(r); g.writeEndObject() }
     g.writeEndArray()
@@ -67,39 +67,37 @@ object ResponseAssembly {
       .bigDecimal.stripTrailingZeros.toPlainString)
   }
 
-  /** `names` as [[num]] fields of `r`'s columns `from`, `from + 1`, …;
-    * a null column is a null field. */
-  private def nums(g: JsonGenerator, r: Row, from: Int, names: String*): Unit =
-    names.zipWithIndex.foreach { case (name, i) =>
-      if (r.isNullAt(from + i)) g.writeNullField(name) else num(g, name, r.getDouble(from + i))
-    }
+  /** [[num]], or a null field for None. */
+  private def num(g: JsonGenerator, name: String, v: Option[Double]): Unit =
+    v.fold(g.writeNullField(name))(num(g, name, _))
 
-  /** Forecast columns → `Prediction` record fields (`responses.py:20-33`,
-    * P3 rename map `app.py:336-352`). */
-  private val predictionFields = Seq(
-      "yhat" -> "prediction", "yhat_lower" -> "prediction_lower_bound",
-      "yhat_upper" -> "prediction_upper_bound", "trend" -> "trend",
-      "trend_lower" -> "trend_lower_bound", "trend_upper" -> "trend_upper_bound") ++
-    Seq("additive_terms", "additive_terms_lower", "additive_terms_upper", "multiplicative_terms",
-        "multiplicative_terms_lower", "multiplicative_terms_upper").map(c => c -> c)
-  private val predictionNames = predictionFields.map(_._2)
+  /** The pass's records, collected once and grouped by correlation. */
+  private def collected(result: AnalyzeResult): Map[String, Array[PassRow]] =
+    result.pass.collect().groupBy(_.series)
 
-  /** The target forecast rows of every series, collected once:
-    * (series, ds, segment, the `predictionFields` columns). */
-  private def forecastsOf(result: AnalyzeResult): Map[String, Array[Row]] =
-    result.targetForecasts.select(("series" +: "ds" +: "segment" +: predictionFields.map(_._1))
-        .map(col): _*)
-      .collect().groupBy(_.getString(0))
+  /** One correlation's target forecast rows. */
+  private def targetForecasts(rows: Array[PassRow]): Array[ForecastRow] =
+    rows.collect { case r if r.forecast != null && r.side == "to" => r.forecast }
 
   /** `historicalForecasts` and `futureForecasts`: one series' rows split
-    * by segment, each sorted by date, as `Prediction` records. */
-  private def writeForecasts(g: JsonGenerator, rows: Array[Row]): Unit =
+    * by segment, each sorted by date, as `Prediction` records
+    * (`responses.py:20-33`, P3 rename map `app.py:336-352`). */
+  private def writeForecasts(g: JsonGenerator, rows: Array[ForecastRow]): Unit =
     for ((field, segment) <- Seq("historicalForecasts" -> "historical",
                                  "futureForecasts" -> "future")) {
-      val dated = rows.filter(_.getString(2) == segment).sortBy(_.getTimestamp(1).getTime)
+      val dated = rows.filter(_.segment == segment).sortBy(_.ds.getTime)
       objects(g, field, dated) { r =>
-        g.writeStringField("date", fmtTs(r.getTimestamp(1)))
-        nums(g, r, 3, predictionNames: _*)
+        g.writeStringField("date", fmtTs(r.ds))
+        Seq("prediction" -> r.yhat, "prediction_lower_bound" -> r.yhat_lower,
+            "prediction_upper_bound" -> r.yhat_upper, "trend" -> r.trend,
+            "trend_lower_bound" -> r.trend_lower, "trend_upper_bound" -> r.trend_upper,
+            "additive_terms" -> r.additive_terms,
+            "additive_terms_lower" -> r.additive_terms_lower,
+            "additive_terms_upper" -> r.additive_terms_upper,
+            "multiplicative_terms" -> r.multiplicative_terms,
+            "multiplicative_terms_lower" -> r.multiplicative_terms_lower,
+            "multiplicative_terms_upper" -> r.multiplicative_terms_upper)
+          .foreach { case (name, v) => num(g, name, v) }
       }
     }
 
@@ -122,19 +120,17 @@ object ResponseAssembly {
     * "LLM context" product, so they are served. */
   def toJson(result: AnalyzeResult, specs: Seq[CorrelationSpec]): String = {
     val specOf = specs.map(c => c.id -> c).toMap
-    val diag = result.diagnostics.collect().groupBy(r => (r.getString(0), r.getString(4)))
-    val bounds = result.bounds.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r).toMap
-    val coefs = result.regressorCoefficients.collect().groupBy(_.getString(0))
-    val grangerRows = result.granger
-      .map(_.collect().groupBy(_.getString(0))).getOrElse(Map.empty)
-    val uniRows = result.univariate
-      .map(_.collect().groupBy(_.getString(0))).getOrElse(Map.empty)
-    val forecasts = forecastsOf(result)
+    val rowsOf = collected(result)
+    val ids = rowsOf.collect {
+      case (id, rows) if rows.exists(r => r.diagnostic != null ||
+                                          (r.forecast != null && r.side == "to")) => id
+    }
 
-    correlationsJson((forecasts.keySet ++ diag.keys.map(_._1)).toSeq.sorted) { (g, id) =>
+    correlationsJson(ids.toSeq.sorted) { (g, id) =>
+      val rows = rowsOf(id)
       val spec = specOf.get(id)
-      val (fromH, toH) = result.horizons.getOrElse(id, (0, 0))
+      val (fromH, toH) = rows.collectFirst { case r if r.fit != null =>
+        (r.fit.from_horizon, r.fit.to_horizon) }.getOrElse((0, 0))
       val regName = spec.map(_.fromIndex).getOrElse("x")
       // `type` is echoed; the C9/C12 blocks are shapes the reference
       // declares (responses.py:51) but never ships
@@ -144,22 +140,33 @@ object ResponseAssembly {
         // all four statsmodels statistics per lag (`Untitled.ipynb`
         // cell 12 prints ssr_ftest/ssr_chi2test/lrtest/params_ftest)
         g.writeStringField("causeIndex", regName)
-        obj(g, "lags")(grangerRows.getOrElse(id, Array.empty).sortBy(_.getInt(1)).foreach { r =>
-          obj(g, r.getInt(1).toString) {
-            nums(g, r, 2, "fStat", "pValue")
-            g.writeNumberField("dfNum", r.getInt(4))
-            g.writeNumberField("dfDenom", r.getInt(5))
-            nums(g, r, 6, "ssrChi2", "pChi2", "lr", "pLr", "paramsF", "pParamsF")
+        obj(g, "lags")(rows.flatMap(r => Option(r.granger)).sortBy(_.lag).foreach { l =>
+          obj(g, l.lag.toString) {
+            num(g, "fStat", l.fStat)
+            num(g, "pValue", l.pValue)
+            g.writeNumberField("dfNum", l.dfNum)
+            g.writeNumberField("dfDenom", l.dfDenom)
+            num(g, "ssrChi2", l.chi2)
+            num(g, "pChi2", l.pChi2)
+            num(g, "lr", l.lr)
+            num(g, "pLr", l.pLr)
+            num(g, "paramsF", l.paramsF)
+            num(g, "pParamsF", l.paramsP)
           }
         })
       }
-      // stddev_samp is NULL for n=1 and skewness/kurtosis for n<3: null
-      // fields, not a 500
+      // stddev_samp is NULL for n=1 and skewness/kurtosis for a constant
+      // series: null fields, not a 500
       if (corrType == "univariateStatistics") obj(g, "univariateStatistics") {
         for (side <- Seq("from", "to")) obj(g, side) {
-          uniRows.getOrElse(id, Array.empty).find(_.getString(1) == side).foreach { r =>
-            g.writeNumberField("count", r.getLong(2))
-            nums(g, r, 3, "mean", "std", "min", "max", "skewness", "kurtosis")
+          rows.find(r => r.univariate != null && r.side == side).map(_.univariate).foreach { m =>
+            g.writeNumberField("count", m.n)
+            num(g, "mean", m.mean)
+            num(g, "std", m.std)
+            num(g, "min", m.min)
+            num(g, "max", m.max)
+            num(g, "skewness", m.skewness)
+            num(g, "kurtosis", m.kurtosis)
           }
         }
       }
@@ -172,29 +179,32 @@ object ResponseAssembly {
               g.writeStringField("data", doc)
               g.writeStringField("index", idx)
             }
-            bounds.get((id, side)).foreach { b =>
-              g.writeStringField("minDate", fmtTs(b.getTimestamp(2)))
-              g.writeStringField("maxDate", fmtTs(b.getTimestamp(3)))
+            rows.find(r => r.bounds != null && r.side == side).foreach { r =>
+              g.writeStringField("minDate", fmtTs(r.bounds.min_ds))
+              g.writeStringField("maxDate", fmtTs(r.bounds.max_ds))
               g.writeNumberField("unitsForecasted", h)
             }
           }
       }
-      for ((block, description, valueIdx) <- Seq(
-             ("autocorrelations", Explanations.autocorrelation, 2),
-             ("partialAutocorrelations", Explanations.partialAutocorrelation, 3)))
+      for ((block, description, value) <- Seq[(String, String, Diagnostic => Double)](
+             ("autocorrelations", Explanations.autocorrelation, _.acf),
+             ("partialAutocorrelations", Explanations.partialAutocorrelation, _.pacf)))
         obj(g, block) {
           g.writeStringField("description", description)
           for (side <- Seq("from", "to")) obj(g, side)(obj(g, "lags") {
-            diag.getOrElse((id, side), Array.empty).sortBy(_.getInt(1))
-              .foreach(r => num(g, r.getInt(1).toString, r.getDouble(valueIdx)))
+            rows.collect { case r if r.diagnostic != null && r.side == side => r.diagnostic }
+              .sortBy(_.lag).foreach(d => num(g, d.lag.toString, value(d)))
           })
         }
-      objects(g, "regressorCoefficients", coefs.getOrElse(id, Array.empty)) { r =>
+      objects(g, "regressorCoefficients", rows.flatMap(r => Option(r.coefficient))) { c =>
         g.writeStringField("regressor", regName)
-        g.writeStringField("regressor_mode", r.getString(1))
-        nums(g, r, 2, "center", "coef_lower", "coef", "coef_upper")
+        g.writeStringField("regressor_mode", c.regressor_mode)
+        num(g, "center", c.center)
+        num(g, "coef_lower", c.coef_lower)
+        num(g, "coef", c.coef)
+        num(g, "coef_upper", c.coef_upper)
       }
-      obj(g, "predictions")(writeForecasts(g, forecasts.getOrElse(id, Array.empty)))
+      obj(g, "predictions")(writeForecasts(g, targetForecasts(rows)))
     }
   }
 
@@ -207,17 +217,17 @@ object ResponseAssembly {
     * index), not the logistic floor/cap. */
   def toJsonSaturating(result: AnalyzeResult,
                        growthOf: Map[String, String]): String = {
-    val dateBounds = result.bounds.collect().filter(_.getString(1) == "to")
-      .map(r => r.getString(0) -> r).toMap
-    val forecasts = forecastsOf(result)
+    val rowsOf = collected(result)
+    val forecasts = rowsOf.map { case (id, rows) => id -> targetForecasts(rows) }
+      .filter(_._2.nonEmpty)
     correlationsJson(forecasts.keySet.toSeq.sorted) { (g, id) =>
       obj(g, "type") {
         g.writeStringField("model", "prophet")
         g.writeStringField("growth", growthOf.getOrElse(id, "linear"))
-        dateBounds.get(id).foreach { b =>
+        rowsOf(id).find(r => r.bounds != null && r.side == "to").foreach { r =>
           obj(g, "bounds") {
-            g.writeStringField("min", fmtTs(b.getTimestamp(2)))
-            g.writeStringField("max", fmtTs(b.getTimestamp(3)))
+            g.writeStringField("min", fmtTs(r.bounds.min_ds))
+            g.writeStringField("max", fmtTs(r.bounds.max_ds))
           }
         }
       }

@@ -1,6 +1,8 @@
 package graft.forecast
 
+import java.time.ZoneId
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
 /** DataFrame-facing forecast operator (SURVEY §2.7 C3-C6, C8).
@@ -55,32 +57,44 @@ object Forecaster {
       .flatMapGroups { (key, it) =>
         val rows = it.toArray.sortBy(_._2)
         val hist = rows.filter(r => r._5 && r._3.isDefined)
-        if (hist.length < 2) Iterator.empty
-        else {
-          val tHist = hist.map(_._2)
-          val yHist = hist.map(_._3.get)
-          val xHist = if (hasX) Some(hist.map(_._4.getOrElse(0.0))) else None
-          val model = StructuralTS.fit(tHist, yHist, xHist, specOverrides.getOrElse(key, spec))
-          val tAll = rows.map(_._2)
-          val xAll = if (hasX) Some(rows.map(_._4.getOrElse(0.0))) else None
-          val preds = StructuralTS.predict(model, tAll, xAll)
-          val tMaxHist = tHist.last
-          Iterator.tabulate(rows.length) { i =>
-            val p = preds(i)
-            ForecastRow(key,
-              new java.sql.Timestamp((rows(i)._2 * 1000).toLong),
-              if (rows(i)._2 <= tMaxHist) "historical" else "future",
-              p.yhat, p.yhatLower, p.yhatUpper,
-              p.trend, p.trendLower, p.trendUpper,
-              p.additive, p.additiveLower, p.additiveUpper,
-              0.0, 0.0, 0.0,
-              p.quantileValues.toSeq)
-          }
-        }
+        def xs(rs: Array[(String, Double, Option[Double], Option[Double], Boolean)]) =
+          if (hasX) Some(rs.map(_._4.getOrElse(0.0))) else None
+        forecast(key, hist.map(_._2), hist.map(_._3.get), xs(hist), rows.map(_._2), xs(rows),
+                 specOverrides.getOrElse(key, spec))
+          .fold(Iterator.empty[ForecastRow])(_._2.iterator)
       }
       .toDF()
       .withColumnRenamed("series", seriesCol)
   }
+
+  /** [[forecast]]'s body for one series `key`: fit on the history
+    * (`tHist` epoch seconds ascending, `yHist`, and `xHist` when there is
+    * a regressor) and predict at every instant of `tAll` (ascending: the
+    * history's instants, then the future's; `xAll` their regressor
+    * values). A row is `historical` up to the last history instant.
+    * Returns the fitted model with the rows; None when the history has
+    * fewer than 2 points. */
+  def forecast(key: String, tHist: Array[Double], yHist: Array[Double],
+               xHist: Option[Array[Double]], tAll: Array[Double],
+               xAll: Option[Array[Double]], spec: StructuralTS.FitSpec)
+      : Option[(StructuralTS.Model, Array[ForecastRow])] =
+    if (tHist.length < 2) None
+    else {
+      val model = StructuralTS.fit(tHist, yHist, xHist, spec)
+      val preds = StructuralTS.predict(model, tAll, xAll)
+      val tMaxHist = tHist.last
+      Some(model -> Array.tabulate(tAll.length) { i =>
+        val p = preds(i)
+        ForecastRow(key,
+          new java.sql.Timestamp((tAll(i) * 1000).toLong),
+          if (tAll(i) <= tMaxHist) "historical" else "future",
+          p.yhat, p.yhatLower, p.yhatUpper,
+          p.trend, p.trendLower, p.trendUpper,
+          p.additive, p.additiveLower, p.additiveUpper,
+          0.0, 0.0, 0.0,
+          p.quantileValues.toSeq)
+      })
+    }
 
   /** C7 `regressor_coefficients` per series: de-standardized coefficient
     * with interval bounds and the standardization center
@@ -102,13 +116,21 @@ object Forecaster {
         else {
           val s = specOverrides.getOrElse(key, spec).copy(hasRegressor = true)
           val m = StructuralTS.fit(rows.map(_._2), rows.map(_._3), Some(rows.map(_._4)), s)
-          StructuralTS.regressorCoefficient(m).iterator.map { case (coef, lo, hi, center) =>
-            (key, "additive", center, lo, coef, hi)
+          regressorCoefficients(m).iterator.map { case (mode, center, lo, coef, hi) =>
+            (key, mode, center, lo, coef, hi)
           }
         }
       }
       .toDF(seriesCol, "regressor_mode", "center", "coef_lower", "coef", "coef_upper")
   }
+
+  /** [[regressorCoefficients]]'s body for one model fitted with a
+    * regressor: (regressor_mode, center, coef_lower, coef, coef_upper). */
+  def regressorCoefficients(model: StructuralTS.Model)
+      : Option[(String, Double, Double, Double, Double)] =
+    StructuralTS.regressorCoefficient(model).map { case (coef, lo, hi, center) =>
+      ("additive", center, lo, coef, hi)
+    }
 
   /** C6 `make_future_dataframe`: per series, `horizon` periods after
     * max(ds) at the grain's spacing — generated distributively via
@@ -116,13 +138,7 @@ object Forecaster {
   def futureGrid(history: DataFrame, grain: String, horizon: Int,
                  seriesCol: String = "series",
                  horizonOverrides: Map[String, Int] = Map.empty): DataFrame = {
-    val unit = graft.ts.TimeOps.normalizeGrain(grain) match {
-      case "D" => "DAY"
-      case "W" => "WEEK"
-      case "M" => "MONTH"
-      case "H" => "HOUR"
-      case "m" => "MINUTE"
-    }
+    val unit = unitOf(grain)
     val h =
       if (horizonOverrides.isEmpty) lit(horizon)
       else coalesce(element_at(typedLit(horizonOverrides), col(seriesCol).cast("string")),
@@ -132,5 +148,22 @@ object Forecaster {
       .agg(max(col("ds").cast("timestamp")).as("max_ds"))
       .select(col(seriesCol), explode(sequence(lit(1), h)).as("step"), col("max_ds"))
       .select(col(seriesCol), expr(s"timestampadd($unit, step, max_ds)").as("ds"))
+  }
+
+  /** [[futureGrid]] for one series: the `horizon` instants after `last`
+    * (epoch microseconds), by the function `timestampadd` evaluates in
+    * the session time zone `zone`, so W and M steps stay calendar-exact. */
+  def futureGrid(last: Long, grain: String, horizon: Int, zone: ZoneId): Array[Long] = {
+    val unit = unitOf(grain)
+    Array.tabulate(horizon)(i => DateTimeUtils.timestampAdd(unit, i + 1L, last, zone))
+  }
+
+  /** The `timestampadd` unit of a grain. */
+  private def unitOf(grain: String): String = graft.ts.TimeOps.normalizeGrain(grain) match {
+    case "D" => "DAY"
+    case "W" => "WEEK"
+    case "M" => "MONTH"
+    case "H" => "HOUR"
+    case "m" => "MINUTE"
   }
 }

@@ -58,8 +58,8 @@ package object queries {
     * input/param combination is a distinct canonicalized plan and
     * therefore a distinct CacheManager entry for the session's lifetime;
     * pipelines that cache request-scoped frames must expose an
-    * unpersist path (AnalyzePipeline → `AnalyzeResult.close()`,
-    * TextQueries → per-session memo eviction, Similarity/TextDedup index
+    * unpersist path (TextQueries → per-session memo eviction,
+    * Similarity/TextDedup index
     * frames → one entry per (input, params), reused across calls). A
     * long-lived service cycling many distinct corpora retires a
     * corpus's indexes with [[releaseIndexes]] — without it the
@@ -74,9 +74,9 @@ package object queries {
 
   /** Every live frame cacheOnce has materialized, so eviction can be
     * keyed by the SOURCE frame rather than the derived index the caller
-    * never held. Entries whose cache was dropped elsewhere (e.g.
-    * `AnalyzeResult.close()` unpersisting the same frame) are pruned on
-    * each access, so the registry tracks live entries only. */
+    * never held. Entries whose cache was dropped elsewhere (a caller
+    * unpersisting the same frame) are pruned on each access, so the
+    * registry tracks live entries only. */
   private val registry = scala.collection.mutable.ListBuffer.empty[DataFrame]
 
   private def pruneRegistry(): Unit = registry.filterInPlace(

@@ -27,13 +27,18 @@ object Diagnostics {
       .as[(String, Long, Double)]
       .groupByKey(_._1)
       .flatMapGroups { (key, it) =>
-        val ys = it.toArray.sortBy(_._2).map(_._3)
-        val nl = nlags.getOrElse(AutoCorr.defaultNlags(ys.length))
-        val a = AutoCorr.acf(ys, nl)
-        val p = AutoCorr.pacfYWAdjusted(ys, nl)
-        Iterator.tabulate(nl + 1)(i => (key, i, a(i), p(i)))
+        acfPacf(it.toArray.sortBy(_._2).map(_._3), nlags).map { case (lag, a, p) => (key, lag, a, p) }
       }
       .toDF(seriesCol, "lag", "acf", "pacf")
+  }
+
+  /** [[acfPacf]]'s body for one series `ys` in time order: (lag, acf,
+    * pacf) for lags 0 to `nlags` (default [[AutoCorr.defaultNlags]]). */
+  def acfPacf(ys: Array[Double], nlags: Option[Int]): Iterator[(Int, Double, Double)] = {
+    val nl = nlags.getOrElse(AutoCorr.defaultNlags(ys.length))
+    val a = AutoCorr.acf(ys, nl)
+    val p = AutoCorr.pacfYWAdjusted(ys, nl)
+    Iterator.tabulate(nl + 1)(i => (i, a(i), p(i)))
   }
 
   /** Ljung–Box portmanteau test — the "is there ANY autocorrelation

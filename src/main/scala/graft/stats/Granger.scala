@@ -288,15 +288,22 @@ object Granger {
       .groupByKey(_._1)
       .flatMapGroups { (key, it) =>
         val rows = it.toArray.sortBy(_._2)
-        val ts = rows.map(_._2)
-        val (effect, cause) =
-          if (detrend) (detrendArr(ts, rows.map(_._3)), detrendArr(ts, rows.map(_._4)))
-          else (rows.map(_._3), rows.map(_._4))
-        test(effect, cause, maxlag).iterator
+        causality(rows.map(_._2), rows.map(_._3), rows.map(_._4), maxlag, detrend).iterator
           .map(r => (key, r.lag, r.fStat, r.pValue, r.dfNum, r.dfDenom,
                      r.chi2, r.pChi2, r.lr, r.pLr, r.paramsF, r.paramsP))
       }
-      .toDF(seriesCol, "lag", "f_stat", "p_value", "df_num", "df_denom",
-            "ssr_chi2", "p_chi2", "lr_stat", "p_lr", "params_f", "p_params_f")
+      .toDF(seriesCol +: columns: _*)
   }
+
+  /** The columns of [[causality]]'s frame after the series key, one per
+    * [[LagResult]] field in order. */
+  val columns: Seq[String] = Seq("lag", "f_stat", "p_value", "df_num", "df_denom",
+    "ssr_chi2", "p_chi2", "lr_stat", "p_lr", "params_f", "p_params_f")
+
+  /** [[causality]]'s body for one series: `cause` → `effect` at lags
+    * 1..maxlag over aligned arrays at the instants `ts` (ascending). */
+  def causality(ts: Array[Double], effect: Array[Double], cause: Array[Double],
+                maxlag: Int, detrend: Boolean): Seq[LagResult] =
+    if (detrend) test(detrendArr(ts, effect), detrendArr(ts, cause), maxlag)
+    else test(effect, cause, maxlag)
 }

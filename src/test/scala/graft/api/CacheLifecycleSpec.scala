@@ -1,17 +1,14 @@
 package graft.api
 
 import graft.SparkTestSession
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.execution.CacheManager
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Request-scoped cache lifecycle: a long-lived session serving many
-  * DISTINCT analyze() requests must not accumulate CacheManager entries
-  * — each call caches per-request histories/splice frames whose
-  * canonicalized plans differ per input, so without an explicit release
-  * path the cache grows unboundedly. `AnalyzeResult.close()` is that
-  * path; `getPersistentRDDs` is the public probe (cached frames register
-  * their column-buffer RDDs there once materialized, unpersist removes
-  * them). */
+/** Request lifecycle: a long-lived session serving many DISTINCT
+  * requests must not accumulate CacheManager entries or persistent RDDs.
+  * A request is one uncached keyed pass, so answering it — `analyze`,
+  * then the response, with or without `AnalyzeResult.close()` — leaves
+  * both exactly as they were. */
 class CacheLifecycleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -27,28 +24,37 @@ class CacheLifecycleSpec extends AnyFunSuite {
     id = "c1", fromData = "m", fromIndex = "v", toData = "m", toIndex = "v",
     grain = Some("D"), unitsToForecast = Some(4))
 
-  test("analyze() caches are released by close(); no growth across distinct requests") {
-    // settle: other suites share the session; measure our own delta only
-    val baseline = spark.sparkContext.getPersistentRDDs.size
-    (1 to 3).foreach { seed =>
-      val result = AnalyzePipeline.analyze(docs(seed), Seq(spec))
-      // materialize everything a caller would consume
-      assert(result.targetForecasts.count() > 0)
-      assert(result.diagnostics.count() > 0)
-      assert(result.cachedFrames.nonEmpty)
-      // materialized caches are live now (registered persistent RDDs)
-      assert(result.cachedFrames.forall(_.storageLevel != StorageLevel.NONE))
-      result.close()
-      assert(result.cachedFrames.forall(_.storageLevel == StorageLevel.NONE))
-    }
-    assert(spark.sparkContext.getPersistentRDDs.size <= baseline,
-      "analyze() leaked persistent RDDs across closed requests")
+  /** The CacheManager's entries and the persistent RDD ids. Its entry
+    * list has no public reader, so it is read by reflection. */
+  private def cacheState(): (Seq[AnyRef], Set[Int]) = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val entries = classOf[CacheManager].getDeclaredMethod("cachedData")
+    entries.setAccessible(true)
+    (entries.invoke(cm).asInstanceOf[Seq[AnyRef]], spark.sparkContext.getPersistentRDDs.keySet.toSet)
   }
 
-  test("analyzeSingle() caches are released by close()") {
+  test("analyze() then toJson leaves the caches as they were") {
+    // closed or not, and with no growth across distinct requests; other
+    // suites share the session: compare with this suite's own start
+    val before = cacheState()
+    for (seed <- 1 to 3; close <- Seq(true, false)) {
+      val result = AnalyzePipeline.analyze(docs(seed), Seq(spec))
+      assert(ResponseAssembly.toJson(result, Seq(spec)).contains("futureForecasts"))
+      // the frames library callers read, too
+      assert(result.targetForecasts.count() > 0 && result.diagnostics.count() > 0)
+      if (close) result.close()
+      assert(cacheState() == before, s"request $seed (close = $close) left a cache")
+    }
+  }
+
+  test("analyzeSingle() leaves the caches as they were") {
+    val before = cacheState()
     val result = AnalyzePipeline.analyzeSingle(docs(9), Seq(spec))
-    assert(result.targetForecasts.count() > 0)
+    assert(ResponseAssembly.toJsonSaturating(result, Map("c1" -> "linear"))
+      .contains("futureForecasts"))
+    assert(cacheState() == before)
     result.close()
-    assert(result.cachedFrames.forall(_.storageLevel == StorageLevel.NONE))
+    assert(cacheState() == before)
   }
 }

@@ -5,6 +5,8 @@ import graft.SparkTestSession
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
@@ -206,6 +208,72 @@ class HttpShellSpec extends AnyFunSuite {
         assert(detail.contains("duplicate correlation id: c0"), detail)
       }
     } finally HttpShell.stop(server)
+  }
+
+  test("a body that is not JSON is a 422 with a JSON detail") {
+    val server = HttpShell.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      for (route <- Seq("/analyze", "/saturating-growth", "/saturating-growth/single");
+           body <- Seq("{not json", "", "[1, 2"))  {
+        val r = post(port, route, body)
+        assert(r.statusCode() == 422, s"$route <$body>: ${r.body().take(200)}")
+        val detail = new ObjectMapper().readTree(r.body()).get("detail")
+        assert(detail != null && detail.isTextual && detail.asText.nonEmpty, r.body())
+      }
+    } finally HttpShell.stop(server)
+  }
+
+  /** Counts the jobs and stages started in job group `group`. */
+  private final class JobCounter(group: String) extends SparkListener {
+    val jobs, stages, ended = new java.util.concurrent.atomic.AtomicInteger
+    private val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    private def ours(p: java.util.Properties) =
+      p != null && p.getProperty("spark.jobGroup.id") == group
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (ours(e.properties)) { started.add(e.jobId); jobs.incrementAndGet() }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (started.contains(e.jobId)) ended.incrementAndGet()
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      if (ours(e.properties)) stages.incrementAndGet()
+  }
+
+  /** `f`'s (jobs, stages), run in a job group of its own on this thread.
+    * Listener events arrive asynchronously: wait until every job seen
+    * started has ended. */
+  private def jobsAndStages(f: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val group = s"count-${System.nanoTime()}"
+    val counter = new JobCounter(group)
+    sc.addSparkListener(counter)
+    try {
+      sc.setJobGroup(group, "job count", interruptOnCancel = false)
+      try f finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 20000000000L
+      while (System.nanoTime() < deadline && counter.ended.get < counter.jobs.get) Thread.sleep(20)
+      Thread.sleep(200)
+      (counter.jobs.get, counter.stages.get)
+    } finally sc.removeSparkListener(counter)
+  }
+
+  test("a warm /analyze of the daily request runs at most 5 jobs and 5 stages; analyze() runs none") {
+    val body = ResponseGoldens.read("/requests/daily_nested.json")
+    val server = HttpShell.start(spark, 0)
+    val warm = try post(server.getAddress.getPort, "/analyze", body)
+               finally HttpShell.stop(server)
+    assert(warm.statusCode() == 200, warm.body().take(200))
+    // the handler's steps, on this thread so the job group covers them
+    val parsed = RequestParser.parse(spark, body)
+    var result: AnalyzePipeline.AnalyzeResult = null
+    assert(jobsAndStages {
+      result = AnalyzePipeline.analyze(parsed.documents, parsed.correlations)
+    } == (0, 0), "analyze() ran Spark jobs")
+    val (jobs, stages) = jobsAndStages {
+      val p = RequestParser.parse(spark, body)
+      ResponseAssembly.toJson(AnalyzePipeline.analyze(p.documents, p.correlations), p.correlations)
+    }
+    assert(jobs <= 5 && stages <= 5, s"one /analyze ran $jobs jobs and $stages stages")
+    assert(ResponseAssembly.toJson(result, parsed.correlations) == warm.body())
   }
 
   test("stop shuts down the executor pool (no idle-pool accumulation)") {

@@ -2,7 +2,11 @@
 """Dev-only self-check mirroring the driver's t2 gate: run each oracle SQL
 in DuckDB over the same parquet tables and compare against the Verify
 output parquet (sorted columns, sorted rows, value-level equality).
-Usage: selfcheck.py <sfDir> <verifyOutDir>"""
+Usage: selfcheck.py <sfDir> <verifyOutDir>
+
+Ends with `checked N, failed M`. Exits 0 when every checked query
+matches, 1 when one fails, and 2 when nothing was checked (an output
+whose queries have no oracle SQL, such as a q41-only Verify run)."""
 import sys, json, glob, os
 import duckdb
 import pandas as pd
@@ -71,4 +75,6 @@ for name, sql in sorted(oracle.items()):
     except AssertionError as e:
         print(f"FAIL {name}: {str(e).splitlines()[-1] if str(e) else e}")
         fail += 1
-sys.exit(1 if fail else 0)
+checked = len(oracle)
+print(f"checked {checked}, failed {fail}")
+sys.exit(2 if checked == 0 else 1 if fail else 0)
