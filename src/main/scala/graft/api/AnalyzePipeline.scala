@@ -8,6 +8,7 @@ import graft.ts.{Aggregations, TimeOps}
 import java.sql.Timestamp
 import java.time.ZoneId
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -26,7 +27,16 @@ import org.apache.spark.sql.types.{StringType, TimestampType}
   * record. Adding correlations adds rows, not stages: the plan shape is
   * constant and the cluster scales it.
   *
+  * When every leaf of the branches' plan is a `LocalRelation` (the
+  * documents of a parsed request are driver rows) the pass is planned on
+  * one partition: one partition satisfies every grouping, so the
+  * aggregates and the kernel need no exchange and the pass is one stage
+  * of one task. Any other input (q41's table documents) keeps the
+  * shuffled plan.
+  *
   * Stage map (reference op → here):
+  *   P0 parse            → `RequestParser.parse`: the body read on the
+  *                         driver into one `LocalRelation` per document
   *   P1 extract          → [[extractSeries]] (dotted path on nested struct)
   *   T1/T2/T3 + A1       → `TimeOps.bucket` per side + `Aggregations.groupByTime`
   *   A5                  → kernel: horizons from the side lengths
@@ -186,10 +196,14 @@ object AnalyzePipeline {
         .select(lit(c.id).as("series"), lit(side).as("side"),
                 TimeOps.bucket(col("ds"), c.grain.map(TimeOps.normalizeGrain)).as("ds"), col("y"))
     }
-    val histories = branches.map(_._1).distinct.map { agg =>
-      Aggregations.groupByTime(branches.collect { case (a, b) if a == agg => b }
-        .reduce(_ unionByName _), None, agg, Seq("series", "side"))
-    }.reduce(_ unionByName _)
+    // driver rows are planned on one partition (see above)
+    val local = branches.forall(_._2.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation]))
+    def partitioned(df: DataFrame): DataFrame = if (local) df.coalesce(1) else df
+    val histories = partitioned(branches.map(_._1).distinct.map { agg =>
+      Aggregations.groupByTime(partitioned(branches.collect { case (a, b) if a == agg => b }
+        .reduce(_ unionByName _)), None, agg, Seq("series", "side"))
+    }.reduce(_ unionByName _))
 
     val specOf = correlations.map(c => c.id -> c).toMap
     // as today, the series' own cap stats count only when some

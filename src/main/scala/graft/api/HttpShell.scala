@@ -22,8 +22,12 @@ import org.apache.spark.sql.SparkSession
   * `curl -s localhost:8080/health` and
   * `curl -s -XPOST localhost:8080/analyze -d @src/test/resources/requests/daily_nested.json`.
   *
-  * A request is one keyed Spark pass ([[AnalyzePipeline]]) that the
-  * response collects once; it caches nothing, so a long-running shell
+  * A POST body over [[MaxBodyBytes]] is a 413, refused before it is
+  * parsed. Any other body is parsed on the driver with no Spark job
+  * ([[RequestParser]]), and the request is one keyed pass
+  * ([[AnalyzePipeline]]) over those driver rows, which the response
+  * collects once: one Spark job of one stage and one task
+  * (HttpShellSpec pins this). It caches nothing, so a long-running shell
   * leaves the CacheManager and the persistent RDDs as it found them
   * (CacheLifecycleSpec pins this).
   *
@@ -44,6 +48,22 @@ object HttpShell {
     try f finally SparkSession.clearActiveSession()
   }
 
+  /** The largest request body served, in bytes: over 100 times the
+    * largest in-repo request (`hourly_flat.json`, 124 KB). A parsed body
+    * is held as driver rows, so a larger one is refused unparsed. */
+  val MaxBodyBytes: Int = 16 << 20
+
+  /** The request body, or None when it is over [[MaxBodyBytes]]: a
+    * declared `Content-Length` over the limit is refused unread, and no
+    * more than one byte past the limit is ever read. */
+  private def readBody(ex: HttpExchange): Option[String] =
+    if (Option(ex.getRequestHeaders.getFirst("Content-Length"))
+          .flatMap(_.trim.toLongOption).exists(_ > MaxBodyBytes)) None
+    else {
+      val bytes = ex.getRequestBody.readNBytes(MaxBodyBytes + 1)
+      Option.when(bytes.length <= MaxBodyBytes)(new String(bytes, UTF_8))
+    }
+
   private def handler(spark: SparkSession)(route: String): HttpHandler =
     new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
@@ -53,18 +73,21 @@ object HttpShell {
               case "health" if ex.getRequestMethod == "GET" => (200, "null")
               case _ if route == "health" || ex.getRequestMethod != "POST" =>
                 (405, ResponseAssembly.errorJson("Method Not Allowed"))
-              case which =>
-                val req = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-                val parsed = RequestParser.parse(spark, req)
-                val result = which match {
-                  case "single" => AnalyzePipeline.analyzeSingle(parsed.documents, parsed.correlations)
-                  case _        => AnalyzePipeline.analyze(parsed.documents, parsed.correlations)
-                }
-                (200, which match {
-                  case "analyze" => ResponseAssembly.toJson(result, parsed.correlations)
-                  case _ => ResponseAssembly.toJsonSaturating(result,
-                    parsed.correlations.map(c => c.id -> c.growth).toMap)
-                })
+              case which => readBody(ex) match {
+                case None =>
+                  (413, ResponseAssembly.errorJson(s"request body is over $MaxBodyBytes bytes"))
+                case Some(req) =>
+                  val parsed = RequestParser.parse(spark, req)
+                  val result = which match {
+                    case "single" => AnalyzePipeline.analyzeSingle(parsed.documents, parsed.correlations)
+                    case _        => AnalyzePipeline.analyze(parsed.documents, parsed.correlations)
+                  }
+                  (200, which match {
+                    case "analyze" => ResponseAssembly.toJson(result, parsed.correlations)
+                    case _ => ResponseAssembly.toJsonSaturating(result,
+                      parsed.correlations.map(c => c.id -> c.growth).toMap)
+                  })
+              }
             }
           } catch {
             // FastAPI status split: request-shaped failures are

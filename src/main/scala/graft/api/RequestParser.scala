@@ -5,25 +5,35 @@ import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, DriverJson, JacksonParser,
+  JSONOptions, JsonInferSchema}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
-/** S1 + S2: parse the reference's request envelope (FIXTURES.md §1).
-  * The documents go through `spark.read.json`, which does the schema
-  * inference the reference delegates to pydantic +
-  * `pd.DataFrame(list[dict])` (`app.py:65-67`, `app.py:78`): each named
-  * document becomes a DataFrame whose nested observation fields stay
-  * nested structs, so dotted `fromIndex` paths resolve as qualified
-  * column references. The correlations are a handful of small objects,
-  * so they are read on the driver from Jackson's tree of the same body,
-  * which runs no Spark job. */
+/** S1 + S2: parse the reference's request envelope (FIXTURES.md §1) on
+  * the driver, running no Spark job. The documents are read with the
+  * code of Spark's own JSON source, which does the schema inference the
+  * reference delegates to pydantic + `pd.DataFrame(list[dict])`
+  * (`app.py:65-67`, `app.py:78`): `JsonInferSchema` types the body and
+  * `JacksonParser` reads it into rows, once per request. Each named
+  * document becomes a `LocalRelation` of its `data` elements, with the
+  * schema and rows the JSON source's DataFrame of the body gives after
+  * `explode(documents.<name>.data)` (RequestReaderSpec compares the
+  * two): nested observation fields stay nested structs, so dotted
+  * `fromIndex` paths resolve as qualified column references. The
+  * correlations are a handful of small objects, read from Jackson's tree
+  * of the same body. */
 object RequestParser {
 
   case class ParsedRequest(documents: Map[String, DataFrame],
                            correlations: Seq[CorrelationSpec])
 
-  // the JSON dialect spark.read.json accepts by default
+  // the JSON dialect Spark's JSON source accepts by default
   private val mapper = JsonMapper.builder()
     .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES, JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
     .build()
@@ -39,18 +49,65 @@ object RequestParser {
     !node.isMissingNode && !node.isNull &&
       (!node.isObject || node.elements().asScala.exists(v => !v.isObject || holdsValues(v)))
 
+  /** Each named document's `data` elements as a frame over driver rows:
+    * the schema the JSON source infers for the body and the rows of
+    * `explode(documents.<name>.data)` + `r.*`, a null element being a row
+    * of nulls. */
+  private def documentsOf(spark: SparkSession, body: String): Map[String, DataFrame] = {
+    val options = new JSONOptions(Map("multiLine" -> "true"),
+      spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key),
+      spark.conf.get(SQLConf.COLUMN_NAME_OF_CORRUPT_RECORD.key))
+    val inference = new JsonInferSchema(options)
+    // what `JsonInferSchema.infer` does with one record whose root is an object
+    val inferred = {
+      val parser = CreateJacksonParser.string(options.buildJsonFactory(), body)
+      try { parser.nextToken(); inference.inferField(parser) } finally parser.close()
+    }
+    val rootType = DriverJson.canonicalize(inference, inferred, options).collect {
+      case s: StructType => s
+    }.getOrElse(StructType(Nil))
+    val docsAt = rootType.fieldNames.indexOf("documents")
+    val docsType = Option.when(docsAt >= 0)(rootType(docsAt).dataType).collect {
+      case s: StructType => s
+    }.getOrElse(throw new IllegalArgumentException("request body has no documents object"))
+    val root = new JacksonParser(rootType, options, allowArrayAsStructs = true, Nil)
+      .parse(body, CreateJacksonParser.string, UTF8String.fromString).head
+    val docs = root.getStruct(docsAt, docsType.size)
+    // a field as a column reference resolves it: case-insensitively unless
+    // spark.sql.caseSensitive, and only when exactly one field matches
+    val caseSensitive = spark.conf.get(SQLConf.CASE_SENSITIVE.key).toBoolean
+    def ordinal(struct: StructType, name: String): Option[Int] =
+      struct.fieldNames.indices.filter { i =>
+        if (caseSensitive) struct.fieldNames(i) == name else struct.fieldNames(i).equalsIgnoreCase(name)
+      } match {
+        case Seq(i) => Some(i)
+        case _ => None
+      }
+    docsType.fieldNames.map { name =>
+      val relation = for {
+        at <- ordinal(docsType, name)
+        doc <- Some(docsType(at).dataType).collect { case s: StructType => s }
+        dataAt <- ordinal(doc, "data")
+        elem <- Some(doc(dataAt).dataType).collect { case ArrayType(e: StructType, _) => e }
+      } yield {
+        val data = docs.getStruct(at, doc.size).getArray(dataAt)
+        LocalRelation(DataTypeUtils.toAttributes(elem), Seq.tabulate(data.numElements()) { i =>
+          if (data.isNullAt(i)) new GenericInternalRow(elem.size)
+          else data.getStruct(i, elem.size).copy()
+        })
+      }
+      name -> DriverJson.frame(spark, relation.getOrElse(throw new IllegalArgumentException(
+        s"document $name needs one data field holding an array of objects")))
+    }.toMap
+  }
+
   def parse(spark: SparkSession, requestJson: String): ParsedRequest = {
     val root = try mapper.readTree(requestJson) catch {
       case e: JsonProcessingException =>
         throw new IllegalArgumentException(s"request body is not valid JSON: ${e.getOriginalMessage}")
     }
-    import spark.implicits._
-    val env = spark.read.option("multiLine", "true").json(Seq(requestJson).toDS())
-
-    val docsType = env.schema("documents").dataType.asInstanceOf[StructType]
-    val documents = docsType.fieldNames.map { name =>
-      name -> env.select(explode(col(s"documents.`$name`.data")).as("r")).select("r.*")
-    }.toMap
+    require(root != null && root.path("documents").isObject, "request body has no documents object")
+    val documents = documentsOf(spark, requestJson)
 
     val corrNodes = root.path("analyticsOptions").path("correlations")
     require(corrNodes.isArray, "analyticsOptions.correlations must be an array")

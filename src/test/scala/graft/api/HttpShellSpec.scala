@@ -256,24 +256,87 @@ class HttpShellSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(counter)
   }
 
-  test("a warm /analyze of the daily request runs at most 5 jobs and 5 stages; analyze() runs none") {
-    val body = ResponseGoldens.read("/requests/daily_nested.json")
-    val server = HttpShell.start(spark, 0)
-    val warm = try post(server.getAddress.getPort, "/analyze", body)
-               finally HttpShell.stop(server)
-    assert(warm.statusCode() == 200, warm.body().take(200))
-    // the handler's steps, on this thread so the job group covers them
-    val parsed = RequestParser.parse(spark, body)
-    var result: AnalyzePipeline.AnalyzeResult = null
-    assert(jobsAndStages {
-      result = AnalyzePipeline.analyze(parsed.documents, parsed.correlations)
-    } == (0, 0), "analyze() ran Spark jobs")
-    val (jobs, stages) = jobsAndStages {
-      val p = RequestParser.parse(spark, body)
-      ResponseAssembly.toJson(AnalyzePipeline.analyze(p.documents, p.correlations), p.correlations)
+  test("a warm /analyze runs 1 job and 1 stage; parse none") {
+    for (file <- Seq("/requests/daily_nested.json", "/requests/edge/edge_grains.json")) {
+      val body = ResponseGoldens.read(file)
+      val server = HttpShell.start(spark, 0)
+      val warm = try post(server.getAddress.getPort, "/analyze", body)
+                 finally HttpShell.stop(server)
+      assert(warm.statusCode() == 200, warm.body().take(200))
+      // the handler's steps, on this thread so the job group covers them
+      var parsed: RequestParser.ParsedRequest = null
+      assert(jobsAndStages { parsed = RequestParser.parse(spark, body) } == (0, 0),
+             s"$file: parse() ran Spark jobs")
+      var result: AnalyzePipeline.AnalyzeResult = null
+      assert(jobsAndStages {
+        result = AnalyzePipeline.analyze(parsed.documents, parsed.correlations)
+      } == (0, 0), s"$file: analyze() ran Spark jobs")
+      val (jobs, stages) = jobsAndStages {
+        val p = RequestParser.parse(spark, body)
+        ResponseAssembly.toJson(AnalyzePipeline.analyze(p.documents, p.correlations), p.correlations)
+      }
+      assert((jobs, stages) == (1, 1), s"$file: one /analyze ran $jobs jobs and $stages stages")
+      assert(ResponseAssembly.toJson(result, parsed.correlations) == warm.body())
     }
-    assert(jobs <= 5 && stages <= 5, s"one /analyze ran $jobs jobs and $stages stages")
-    assert(ResponseAssembly.toJson(result, parsed.correlations) == warm.body())
+  }
+
+  /** A raw HTTP/1.1 POST to /analyze: `head` names the body's framing
+    * and `body` is sent as is. Returns the status and the body read. */
+  private def rawPost(port: Int, head: String, body: Array[Byte]): (Int, String) = {
+    val socket = new java.net.Socket("localhost", port)
+    try {
+      socket.setSoTimeout(60000)
+      val out = socket.getOutputStream
+      out.write(s"POST /analyze HTTP/1.1\r\nHost: localhost\r\n$head\r\n\r\n".getBytes("UTF-8"))
+      out.write(body)
+      out.flush()
+      val in = new java.io.DataInputStream(socket.getInputStream)
+      val headers = Iterator.continually(readLine(in)).takeWhile(_.nonEmpty).toList
+      val length = headers.collectFirst {
+        case h if h.toLowerCase.startsWith("content-length:") => h.drop(15).trim.toInt
+      }.get
+      val bytes = new Array[Byte](length)
+      in.readFully(bytes)
+      (headers.head.split(' ')(1).toInt, new String(bytes, "UTF-8"))
+    } finally socket.close()
+  }
+
+  private def readLine(in: java.io.InputStream): String = {
+    val line = new StringBuilder
+    var c = in.read()
+    while (c != '\n' && c != -1) { if (c != '\r') line += c.toChar; c = in.read() }
+    line.toString
+  }
+
+  test("a body over the size limit is a 413 with a JSON detail, unparsed") {
+    val server = HttpShell.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      val limit = HttpShell.MaxBodyBytes
+      def detail(r: (Int, String)): String = {
+        assert(r._1 == 413, r._2.take(200))
+        new ObjectMapper().readTree(r._2).get("detail").asText
+      }
+      // a declared length over the limit is refused before any body is read
+      assert(detail(rawPost(port, s"Content-Length: ${limit + 1L}", Array.emptyByteArray))
+        .contains(limit.toString))
+      // a chunked body declares no length: reading stops one byte past the limit
+      val chunk = Array.fill[Byte](1 << 20)('x')
+      val chunked = new java.io.ByteArrayOutputStream()
+      def writeChunk(b: Array[Byte]): Unit = {
+        chunked.write(s"${b.length.toHexString}\r\n".getBytes("UTF-8"))
+        chunked.write(b)
+        chunked.write("\r\n".getBytes("UTF-8"))
+      }
+      (0 until limit / chunk.length).foreach(_ => writeChunk(chunk))
+      writeChunk(chunk.take(1024))
+      chunked.write("0\r\n\r\n".getBytes("UTF-8"))
+      assert(detail(rawPost(port, "Transfer-Encoding: chunked", chunked.toByteArray))
+        .contains(limit.toString))
+      // a body at the limit is read and parsed: this one is not JSON
+      val atLimit = post(port, "/analyze", "x" * limit)
+      assert(atLimit.statusCode() == 422, atLimit.body().take(200))
+    } finally HttpShell.stop(server)
   }
 
   test("stop shuts down the executor pool (no idle-pool accumulation)") {

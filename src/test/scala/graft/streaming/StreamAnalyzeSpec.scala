@@ -110,7 +110,7 @@ class StreamAnalyzeSpec extends AnyFunSuite {
       ((r._2.getTime - base) / 86400000L).toInt
     def append(dir: String, rows: Seq[(String, java.sql.Timestamp, Long)]) =
       if (rows.nonEmpty)
-        rows.toDF("series", "ts", "v").write.mode("append").parquet(dir)
+        rows.toDF("series", "ts", "v").coalesce(1).write.mode("append").parquet(dir)
     append(tDir, allT.filter(dayOf(_) <= 3))
     append(cDir, allC.filter(dayOf(_) <= 3))
     val q = startJob(tDir, cDir, "az2", lateness = 2)

@@ -66,7 +66,7 @@ class StreamCrostonSpec extends AnyFunSuite {
   test("multi-batch stream keeps parity; zero-sum closed days never emit") {
     val dir = Files.createTempDirectory("graft-stream-cr2").toString
     def write(rows: Seq[(String, java.sql.Timestamp, Long)]) =
-      rows.toDF("series", "ts", "v").write.mode("append").parquet(dir)
+      rows.toDF("series", "ts", "v").coalesce(1).write.mode("append").parquet(dir)
     val first = Seq(ev("a", 0, 1, 9L), ev("a", 2, 1, 0L),
                     ev("a", 5, 1, 4L))
     write(first)

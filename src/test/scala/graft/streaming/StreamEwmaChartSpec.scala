@@ -69,7 +69,7 @@ class StreamEwmaChartSpec extends AnyFunSuite {
   test("multi-batch appends keep parity; late events for closed days ignored") {
     val dir = Files.createTempDirectory("graft-stream-ewma2").toString
     def write(rows: Seq[(String, java.sql.Timestamp, Long)]) =
-      rows.toDF("series", "ts", "v").write.mode("append").parquet(dir)
+      rows.toDF("series", "ts", "v").coalesce(1).write.mode("append").parquet(dir)
     val first = Seq(ev("a", 0, 1, 9L), ev("a", 1, 1, 11L),
                     ev("a", 2, 1, 10L), ev("a", 3, 1, 12L),
                     ev("a", 4, 1, 13L))

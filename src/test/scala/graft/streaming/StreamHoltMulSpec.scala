@@ -70,7 +70,7 @@ class StreamHoltMulSpec extends AnyFunSuite {
   test("multi-batch prefixes keep parity; late events for closed days are final") {
     val dir = Files.createTempDirectory("graft-stream-hwm2").toString
     def write(rows: Seq[(String, java.sql.Timestamp, Long)]) =
-      rows.toDF("series", "ts", "v").write.mode("append").parquet(dir)
+      rows.toDF("series", "ts", "v").coalesce(1).write.mode("append").parquet(dir)
     def mk(d: Int) = for (i <- 1 to 2)
       yield ev("a", d, i, (100L + d * 20L) * (10L + (d % 3) * 4L) / 10L + i)
     val first = (0 until 4).flatMap(mk)

@@ -64,7 +64,7 @@ class StreamHoltSpec extends AnyFunSuite {
   test("multi-batch in-order stream keeps parity; late events for closed days are final") {
     val dir = Files.createTempDirectory("graft-stream-hw2").toString
     def write(rows: Seq[(String, java.sql.Timestamp, Long)]) =
-      rows.toDF("series", "ts", "v").write.mode("append").parquet(dir)
+      rows.toDF("series", "ts", "v").coalesce(1).write.mode("append").parquet(dir)
     val first = for (d <- 0 until 4; i <- 1 to 2)
       yield ev("a", d, i, d * 10L + i)
     write(first)

@@ -78,7 +78,7 @@ class StreamNearDupGateSpec extends AnyFunSuite {
   test("multi-batch: matches respect arrival order and rejected docs still block") {
     val dir = Files.createTempDirectory("graft-ndgate2").toString
     def write(rows: Seq[(String, String)]) =
-      rows.toDF("id", "text").write.mode("append").parquet(dir)
+      rows.toDF("id", "text").coalesce(1).write.mode("append").parquet(dir)
     write(Seq(x, z))
     val schema = spark.read.parquet(dir).schema
     val stream = spark.readStream.schema(schema).parquet(dir)

@@ -850,7 +850,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .queryName("late").start()
     try {
       q.processAllAvailable()
-      rows2.toDF("series", "ds", "y").write.mode("append").parquet(dir)
+      rows2.toDF("series", "ds", "y").coalesce(1).write.mode("append").parquet(dir)
       q.processAllAvailable()
       val got = spark.table("late").collect()
         .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2))).toSet

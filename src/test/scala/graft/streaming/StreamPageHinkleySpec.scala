@@ -74,7 +74,7 @@ class StreamPageHinkleySpec extends AnyFunSuite {
   test("multi-batch appends keep parity; late events for closed days ignored") {
     val dir = Files.createTempDirectory("graft-stream-ph2").toString
     def write(rows: Seq[(String, java.sql.Timestamp, Long)]) =
-      rows.toDF("series", "ts", "v").write.mode("append").parquet(dir)
+      rows.toDF("series", "ts", "v").coalesce(1).write.mode("append").parquet(dir)
     val first = Seq(ev("a", 0, 1, 7L), ev("a", 1, 1, 9L),
                     ev("a", 2, 1, 30L))
     write(first)

@@ -80,7 +80,7 @@ class StreamSprtSpec extends AnyFunSuite {
   test("multi-batch appends keep parity; late events ignored; frozen stays frozen") {
     val dir = Files.createTempDirectory("graft-stream-sprt2").toString
     def write(rows: Seq[(String, java.sql.Timestamp, Long)]) =
-      rows.toDF("series", "ts", "v").write.mode("append").parquet(dir)
+      rows.toDF("series", "ts", "v").coalesce(1).write.mode("append").parquet(dir)
     // day 0: 25 failures — crosses H0 once day 1 arrives
     val first = (1 to 25).map(i => ev("a", 0, i, 0L)) :+ ev("a", 1, 1, 1L)
     write(first)
